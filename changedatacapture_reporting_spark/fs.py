@@ -20,6 +20,7 @@ from __future__ import annotations
 import os
 import re
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
 # any explicit scheme prefix (s3a://, hdfs://, file://, and Hadoop's
@@ -328,7 +329,7 @@ def move_file(spark: SparkSession, src: str, dst: str) -> None:
     single-file primitive behind :func:`promote`, exposed for callers
     that relocate staged files across directory layouts (one-pass
     OPTIMIZE moves ``gid=N/part-*.parquet`` into each group's committed
-    partition dir)."""
+    partition dir). Raises ``OSError`` when the move fails."""
     h = _hadoop(spark, src)
     if h is None:
         os.makedirs(os.path.dirname(dst), exist_ok=True)
@@ -338,7 +339,15 @@ def move_file(spark: SparkSession, src: str, dst: str) -> None:
     fs, _ = h
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path
     fs.mkdirs(jvm_path(dst).getParent())
-    fs.rename(jvm_path(src), jvm_path(dst))
+    # FileSystem.rename signals a failed move either by returning false
+    # (HDFS, object stores: missing source, existing destination) or by
+    # throwing (the local FileSystem); both raise OSError, as os.replace
+    try:
+        moved = fs.rename(jvm_path(src), jvm_path(dst))
+    except Py4JJavaError as e:
+        raise OSError(f"rename failed: {src} -> {dst}") from e
+    if not moved:
+        raise OSError(f"rename failed: {src} -> {dst}")
 
 
 def promote(spark: SparkSession, staging_dir: str, dest_dir: str) -> int:

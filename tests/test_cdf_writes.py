@@ -217,3 +217,32 @@ def test_vacuum_reclaims_expired_cdc_only(spark, tmp_path):
     assert _feed(spark, path, 3, 3)[0][2] == "delete"
     with pytest.raises(ValueError, match="change feed"):
         read_delta_cdf(spark, path, 1, 1)
+
+
+def test_cdf_on_partitioned_table(spark, tmp_path):
+    """A partitioned table's change-data files sit in hive dirs under
+    ``_change_data/``; the feed reads exactly the commit's files from
+    there, never a stray file beside them."""
+    path = str(tmp_path / "t")
+    schema = "id long, v long, p string"
+    write_delta(
+        spark,
+        spark.createDataFrame([(1, 10, "a"), (2, 20, "b")], schema),
+        path,
+        partition_by=["p"],
+    )
+    _enable_cdf(spark, path)
+    write_delta(
+        spark,
+        spark.createDataFrame([(9, 90, "a")], schema),
+        path,
+        mode="overwrite",
+        partition_by=["p"],
+    )
+    assert _commit_has_cdc(path, 1)
+    assert sorted(os.listdir(os.path.join(path, CDC_DIR))) == ["p=a", "p=b"]
+    with open(os.path.join(path, CDC_DIR, "p=a", "cdc-stray.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    assert _feed(spark, path, 1, 1) == [
+        (1, 10, "delete", 1), (2, 20, "delete", 1), (9, 90, "insert", 1),
+    ]

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -381,3 +382,26 @@ def test_sink_writes_pk_bloom_filters(spark, tmp_path):
     # NDV hint 100k → ~160 KB bloom per file; same rows otherwise
     assert with_bloom > without + 100_000
     assert sink_write_options()["parquet.bloom.filter.enabled#pk_json"] == "true"
+
+
+def test_move_file_raises_when_rename_fails(spark, tmp_path, monkeypatch):
+    """A ``file://`` path takes the Hadoop FileSystem branch. A failed
+    rename must raise instead of letting a commit record a file that
+    never arrived, whether the FileSystem throws (the local one, on a
+    missing source) or returns ``false`` (HDFS, object stores)."""
+    src = f"file://{tmp_path}/missing.parquet"
+    dst = f"file://{tmp_path}/out/landed.parquet"
+    with pytest.raises(OSError, match="rename failed"):
+        fs.move_file(spark, src, dst)
+    assert not (tmp_path / "out" / "landed.parquet").exists()
+
+    class RefusingFs:
+        def mkdirs(self, path):
+            return True
+
+        def rename(self, src, dst):
+            return False
+
+    monkeypatch.setattr(fs, "_hadoop", lambda spark, path: (RefusingFs(), None))
+    with pytest.raises(OSError, match="rename failed"):
+        fs.move_file(spark, src, dst)

