@@ -625,13 +625,13 @@ def incremental_dedup(
         corpus_index = minhash_band_index(
             corpus, text_col, id_col, n, num_hashes, bands
         )
-    # same rationale as incremental_embedding_dedup: the batch's band
-    # entries feed the corpus-candidate join AND both sides of the
-    # within-batch self-join — lazy persist so the shingle→minhash
-    # pipeline runs once per action, not per join leg
+    # the batch's band entries feed the corpus-candidate join AND both
+    # sides of the within-batch self-join; recomputing a batch's
+    # shingle→minhash pipeline per leg is cheaper than a cached relation
+    # that no caller ever unpersists
     new_index = minhash_band_index(
         new_docs, text_col, id_col, n, num_hashes, bands
-    ).persist()
+    )
 
     nb, cb = new_index.alias("nb"), corpus_index.alias("cb")
     cand_corpus = nb.join(
@@ -706,9 +706,11 @@ def embedding_index(
     ``with_vectors=True`` additionally carries the vector in each index
     row (``vec``): persisted bucketed by (table, bucket) this is the
     serving layout for the ``"group"`` (in-bucket matmul) verification
-    strategy — the corpus never reshuffles at batch time (r10, after
-    the sf1 rehearsal measured the pairwise candidate path blowing up
-    66× at 10× data under dense collisions)."""
+    strategy (r10, after the sf1 rehearsal measured the pairwise
+    candidate path blowing up 66× at 10× data under dense collisions).
+    Saved as a bucketed table, the corpus side never reshuffles at
+    batch time; an index read back from plain files (``spark.read.
+    parquet``) shuffles once per batch, into the cogroup."""
     from changedatacapture_reporting_spark.operators.similarity import (
         lsh_buckets_vectorized,
     )
@@ -717,9 +719,11 @@ def embedding_index(
     cols = [F.col(id_col).alias("id")] + (
         [F.col(vec_col).alias("vec")] if with_vectors else []
     )
-    out_cols = ["id"] + (["vec"] if with_vectors else [])
-    return df.select(*cols, buckets(F.col(vec_col)).alias("bk")).select(
-        *out_cols, F.posexplode("bk").alias("table", "bucket")
+    # posexplode the UDF in the same select: exploding an aliased UDF
+    # column in a second select lets Spark's inferred size(bk) > 0
+    # filter evaluate the Arrow UDF a second time
+    return df.select(
+        *cols, F.posexplode(buckets(F.col(vec_col))).alias("table", "bucket")
     )
 
 
@@ -747,16 +751,19 @@ def incremental_embedding_dedup(
     - ``"group"`` (default since r10): cogroup the batch's index entries
       with the other side's per (table, bucket) and verify INSIDE each
       bucket with one numpy matmul, emitting only above-threshold
-      survivors; survivors re-verify with the fold-exact expression.
-      Sub-threshold candidates never materialize as rows — the r10 sf1
-      rehearsal measured the pairwise path at 66× cost for 10× data
-      under dense collisions (fixed 16-bucket tables make candidate
-      volume ∝ n²/2^planes · tables), group cut it to the collision
-      matmul plus true-match-sized shuffles. Serving layout: persist
+      survivors together with both of their vectors; survivors
+      re-verify with the fold-exact expression straight on the cogroup
+      output, so the matmul runs once per batch. Sub-threshold
+      candidates never materialize as rows — the r10 sf1 rehearsal
+      measured the pairwise path at 66× cost for 10× data under dense
+      collisions (fixed 16-bucket tables make candidate volume
+      ∝ n²/2^planes · tables), group cut it to the collision matmul
+      plus true-match-sized shuffles. Serving layout: persist
       ``embedding_index(..., with_vectors=True)`` bucketed by
-      (table, bucket) so the corpus never reshuffles at batch time; an
-      id-only index is joined back to corpus vectors once (documented
-      fallback).
+      (table, bucket) so the corpus never reshuffles at batch time; a
+      path-based index (read back with ``spark.read.parquet``)
+      reshuffles once per batch, into the cogroup; an id-only index is
+      joined back to corpus vectors once (documented fallback).
     - ``"pairs"``: ship (id, table, bucket), equi-join buckets, distinct
       candidate ids, join vectors back for verification — cheaper when
       collisions are SPARSE (the ~0.9-threshold production regime) and
@@ -782,28 +789,14 @@ def incremental_embedding_dedup(
     new_index = embedding_index(
         new_vecs, vec_col, id_col, tables, planes, dim,
         with_vectors=want_vec,
-    ).persist()
-
-    vecs_all = new_vecs.select(F.col(id_col), F.col(vec_col)).unionByName(
-        corpus.select(F.col(id_col), F.col(vec_col))
-    )
-    v_new = new_vecs.select(
-        F.col(id_col).alias("new_id"), F.col(vec_col).alias("vn")
     )
 
-    def _finish(candidates: DataFrame) -> DataFrame:
-        """Fold-exact verification + keeper pick + batch left join."""
-        other_ids = candidates.select(
-            F.col("other_id").alias(id_col)
-        ).distinct()
-        v_other = vecs_all.join(
-            other_ids, on=id_col, how="left_semi"
-        ).select(F.col(id_col).alias("other_id"), F.col(vec_col).alias("vo"))
+    def _finish(pairs: DataFrame) -> DataFrame:
+        """Fold-exact verification of (new_id, other_id, vn, vo) rows +
+        keeper pick + batch left join."""
         sim = F.round(dot_double(F.col("vn"), F.col("vo")), 6)
         matches = (
-            candidates.join(v_new, "new_id")
-            .join(v_other, "other_id")
-            .filter(sim >= F.lit(threshold))
+            pairs.filter(sim >= F.lit(threshold))
             .groupBy("new_id")
             .agg(F.min("other_id").alias("dup_of"))
         )
@@ -819,6 +812,7 @@ def incremental_embedding_dedup(
 
     if strategy == "group":
         import numpy as np
+        import pyarrow as pa
 
         # other side = corpus entries ∪ batch entries; the is_corpus
         # flag lets the matmul apply the duplicate rule in place
@@ -835,6 +829,14 @@ def incremental_embedding_dedup(
         # sequential fold in the last ulp; emit a hair below threshold,
         # the fold-exact expression in _finish decides membership
         eps = 1e-6
+        out_schema = pa.schema(
+            [
+                ("new_id", pa.int64()),
+                ("other_id", pa.int64()),
+                ("vn", pa.list_(pa.float64())),
+                ("vo", pa.list_(pa.float64())),
+            ]
+        )
 
         def _mat(tbl, col: str) -> np.ndarray:
             # zero-copy: the Arrow ListArray's flat value buffer reshapes
@@ -846,16 +848,14 @@ def incremental_embedding_dedup(
                 len(tbl), -1
             )
 
-        def _bucket_matches(left, right):
-            import pyarrow as pa
+        def _lists(m: np.ndarray) -> pa.ListArray:
+            # (rows, dim) matrix → list<double> column over its flat buffer
+            offsets = np.arange(0, m.size + 1, m.shape[1], dtype=np.int32)
+            return pa.ListArray.from_arrays(offsets, m.ravel())
 
+        def _bucket_matches(left, right):
             if len(left) == 0 or len(right) == 0:
-                return pa.table(
-                    {
-                        "new_id": pa.array([], type=pa.int64()),
-                        "other_id": pa.array([], type=pa.int64()),
-                    }
-                )
+                return out_schema.empty_table()
             nid = left.column("id").to_numpy()
             vn = _mat(left, "vec")
             oid = right.column("id").to_numpy()
@@ -869,20 +869,23 @@ def incremental_embedding_dedup(
                 r, c = np.nonzero(s >= threshold - eps)
                 r = r + lo
                 keep = isc[c] | (oid[c] < nid[r])
-                outs_r.append(nid[r[keep]])
-                outs_c.append(oid[c[keep]])
-            return pa.table(
-                {
-                    "new_id": np.concatenate(outs_r),
-                    "other_id": np.concatenate(outs_c),
-                }
+                outs_r.append(r[keep])
+                outs_c.append(c[keep])
+            r, c = np.concatenate(outs_r), np.concatenate(outs_c)
+            # each survivor ships both vectors, so the fold-exact check
+            # runs on the cogroup output: the matmul runs once per batch
+            return pa.Table.from_arrays(
+                [nid[r], oid[c], _lists(vn[r]), _lists(vo[c])],
+                schema=out_schema,
             )
 
         survivors = (
             new_index.groupBy("table", "bucket")
             .cogroup(other_entries.groupBy("table", "bucket"))
-            .applyInArrow(_bucket_matches, "new_id long, other_id long")
-            .distinct()
+            .applyInArrow(
+                _bucket_matches,
+                "new_id long, other_id long, vn array<double>, vo array<double>",
+            )
         )
         return _finish(survivors)
 
@@ -902,7 +905,19 @@ def incremental_embedding_dedup(
         & (F.col("a.id") < F.col("b.id")),
     ).select(F.col("b.id").alias("new_id"), F.col("a.id").alias("other_id"))
     candidates = cand_corpus.unionByName(cand_batch).distinct()
-    return _finish(candidates)
+
+    # fetch the vectors of the candidate ids only
+    vecs_all = new_vecs.select(F.col(id_col), F.col(vec_col)).unionByName(
+        corpus.select(F.col(id_col), F.col(vec_col))
+    )
+    other_ids = candidates.select(F.col("other_id").alias(id_col)).distinct()
+    v_other = vecs_all.join(other_ids, on=id_col, how="left_semi").select(
+        F.col(id_col).alias("other_id"), F.col(vec_col).alias("vo")
+    )
+    v_new = new_vecs.select(
+        F.col(id_col).alias("new_id"), F.col(vec_col).alias("vn")
+    )
+    return _finish(candidates.join(v_new, "new_id").join(v_other, "other_id"))
 
 
 def benchmark_overlap(

@@ -1253,6 +1253,156 @@ def test_incremental_embedding_dedup_strategies_agree(embeddings):
         incremental_embedding_dedup(new, corpus, strategy="nope")
 
 
+def _split_batch(embeddings):
+    return (
+        embeddings.filter(F.col("vec_id") % 3 == 0),
+        embeddings.filter(F.col("vec_id") % 3 != 0),
+    )
+
+
+def _verdicts(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_incremental_embedding_dedup_group_runs_one_cogroup(embeddings):
+    """The "group" strategy verifies survivors on the cogroup's own
+    output: the executed plan holds the in-bucket matmul exactly once
+    (re-fetching survivor vectors used to re-run it per union branch)."""
+    from changedatacapture_reporting_spark.operators.dedup import (
+        embedding_index,
+        incremental_embedding_dedup,
+    )
+
+    new, corpus = _split_batch(embeddings)
+    out = incremental_embedding_dedup(
+        new, corpus, threshold=0.45,
+        corpus_index=embedding_index(corpus, with_vectors=True),
+    )
+    assert any(r.is_dup for r in out.collect())
+    plan = out._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()  # the final plan, without the initial
+    assert plan.toString().count("FlatMapCoGroupsInArrow") == 1
+
+
+@pytest.mark.parametrize("with_vectors", [False, True])
+def test_embedding_index_evaluates_bucket_udf_once(embeddings, with_vectors):
+    """One Arrow UDF evaluation per posexplode: no inferred filter on
+    the aliased UDF result re-evaluating it."""
+    import re
+
+    from changedatacapture_reporting_spark.operators.dedup import (
+        embedding_index,
+    )
+
+    idx = embedding_index(embeddings, with_vectors=with_vectors)
+    plan = idx._jdf.queryExecution().executedPlan().toString()
+    n_udf = len(re.findall(r"\bArrowEvalPython\b", plan))
+    n_gen = len(re.findall(r"\bGenerate\b", plan))
+    assert n_gen == 1 and n_udf == n_gen, plan
+
+
+def test_incremental_dedup_twins_leave_no_cached_relation(
+    spark, documents, embeddings
+):
+    """Neither twin persists anything its caller would have to release."""
+    from changedatacapture_reporting_spark.operators.dedup import (
+        incremental_dedup,
+        incremental_embedding_dedup,
+    )
+
+    def n_cached():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = n_cached()
+    incremental_dedup(
+        documents.filter(F.col("doc_id") % 3 == 0),
+        documents.filter(F.col("doc_id") % 3 != 0),
+        threshold=0.8,
+    ).collect()
+    assert n_cached() == before
+    incremental_embedding_dedup(
+        *_split_batch(embeddings), threshold=0.45
+    ).collect()
+    assert n_cached() == before
+
+
+def test_incremental_embedding_dedup_empty_batch(embeddings):
+    from changedatacapture_reporting_spark.operators.dedup import (
+        incremental_embedding_dedup,
+    )
+
+    for strategy in ("group", "pairs"):
+        out = incremental_embedding_dedup(
+            embeddings.filter(F.lit(False)), embeddings, threshold=0.45,
+            strategy=strategy,
+        )
+        assert out.collect() == []
+
+
+def test_incremental_embedding_dedup_without_corpus_collisions(spark):
+    """A corpus of the batch's negated vectors flips every hyperplane
+    bit, so no corpus entry shares a bucket with a batch entry: only the
+    within-batch rule decides (11 is a near copy of 10, 12 is
+    orthogonal to both)."""
+    import numpy as np
+
+    from changedatacapture_reporting_spark.operators.dedup import (
+        incremental_embedding_dedup,
+    )
+
+    rng = np.random.default_rng(5)
+    v10 = rng.standard_normal(64)
+    v10 /= np.linalg.norm(v10)
+    v11 = v10 + 0.01 * rng.standard_normal(64)
+    v11 /= np.linalg.norm(v11)
+    v12 = rng.standard_normal(64)
+    v12 -= (v12 @ v10) * v10
+    v12 /= np.linalg.norm(v12)
+    schema = "vec_id long, embedding array<double>"
+    batch = spark.createDataFrame(
+        [(10, v10.tolist()), (11, v11.tolist()), (12, v12.tolist())], schema
+    )
+    corpus = spark.createDataFrame(
+        [(1, (-v10).tolist()), (2, (-v12).tolist())], schema
+    )
+    want = [(10, False, None), (11, True, 10), (12, False, None)]
+    for strategy in ("group", "pairs"):
+        out = incremental_embedding_dedup(
+            batch, corpus, threshold=0.9, strategy=strategy
+        )
+        assert _verdicts(out) == want
+
+
+def test_incremental_embedding_dedup_float_equals_double(embeddings):
+    """array<float> vectors (the fixture's type) widen exactly to
+    double: their verdicts equal those of an array<double> copy."""
+    from changedatacapture_reporting_spark.operators.dedup import (
+        embedding_index,
+        incremental_embedding_dedup,
+    )
+
+    assert embeddings.schema["embedding"].dataType.simpleString() == (
+        "array<float>"
+    )
+    wide = embeddings.withColumn(
+        "embedding", F.col("embedding").cast("array<double>")
+    )
+
+    def run(e):
+        new, corpus = _split_batch(e)
+        return _verdicts(
+            incremental_embedding_dedup(
+                new, corpus, threshold=0.45,
+                corpus_index=embedding_index(corpus, with_vectors=True),
+            )
+        )
+
+    got = run(embeddings)
+    assert any(r[1] for r in got)
+    assert got == run(wide)
+
+
 def test_ivfpq_residual_improves_adc_fidelity(spark):
     """IVFADC (residual=True): pre-rerank ADC recall beats raw-vector
     encoding on the sf0.01 fixture (deterministic: measured 0.60 vs
