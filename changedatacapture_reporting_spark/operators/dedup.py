@@ -523,11 +523,12 @@ def embedding_neardup_bucketed(
         import numpy as np
         import pandas as pd
 
+        # posexplode the UDF in the same select (see embedding_index)
         entries = df.select(
             F.col(id_col).alias("id"),
             F.col(vec_col).alias("vec"),
-            buckets(F.col(vec_col)).alias("bk"),
-        ).select("id", "vec", F.posexplode("bk").alias("table", "bucket"))
+            F.posexplode(buckets(F.col(vec_col))).alias("table", "bucket"),
+        )
 
         # epsilon guard: numpy's pairwise/SIMD summation can differ from
         # the sequential fold in the last ulp; select candidates a hair
@@ -569,8 +570,9 @@ def embedding_neardup_bucketed(
         raise ValueError(f"unknown strategy {strategy!r}")
 
     entries = df.select(
-        F.col(id_col).alias("id"), buckets(F.col(vec_col)).alias("bk")
-    ).select("id", F.posexplode("bk").alias("table", "bucket"))
+        F.col(id_col).alias("id"),
+        F.posexplode(buckets(F.col(vec_col))).alias("table", "bucket"),
+    )
 
     a, b = entries.alias("a"), entries.alias("b")
     candidates = (

@@ -535,6 +535,69 @@ def ivfpq_encode(
     )
 
 
+def _collect_queries(queries: DataFrame, vec_col: str, id_col: str) -> tuple:
+    """(qids, Q × d float64 matrix) of the small query set in qid
+    order, sorted here: an ``orderBy`` adds two range-sampling jobs. A
+    null id is dropped; the id filter drops its rows anyway."""
+    got = queries.select(F.col(id_col).alias("qid"), F.col(vec_col)).collect()
+    rows = sorted((r for r in got if r.qid is not None), key=lambda r: r.qid)
+    qv = np.array([list(r[1]) for r in rows], dtype=np.float64)
+    return [r.qid for r in rows], qv
+
+
+def _no_results(queries: DataFrame, id_col: str) -> DataFrame:
+    """The (query_id, neighbor_id, sim, rank) frame of no queries."""
+    ids = F.col(id_col)
+    return queries.select(
+        ids.alias("query_id"),
+        ids.alias("neighbor_id"),
+        F.lit(None).cast("double").alias("sim"),
+        F.lit(1).alias("rank"),
+    ).limit(0)
+
+
+def _top(pairs: DataFrame, n: int) -> DataFrame:
+    """The ``n`` best (query_id, neighbor_id, sim) rows per query,
+    ranked by sim, ties to the lower neighbor id."""
+    w = W.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
+    return (
+        pairs.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= n)
+        .select("query_id", "neighbor_id", "sim", "rank")
+    )
+
+
+def _rank_shortlist(
+    corpus: DataFrame, queries: DataFrame, scored: DataFrame, k: int,
+    rerank_factor: int, vec_col: str, id_col: str,
+) -> DataFrame:
+    """Top-k of the ADC-``scored`` (query_id, neighbor_id, sim) pairs of
+    :func:`pq_topk` and :func:`ivfpq_topk`. With ``rerank_factor > 0``
+    the ADC top ``k·rerank_factor`` is broadcast into one scan of the
+    corpus, the query vectors are broadcast onto the matches, and the
+    exact dot product ranks the shortlist once."""
+    shortlist = _top(scored, k * rerank_factor if rerank_factor > 0 else k)
+    if rerank_factor <= 0:
+        return shortlist
+    qframe = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+    )
+    refined = (
+        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
+        .join(
+            F.broadcast(shortlist.select("query_id", "neighbor_id")),
+            "neighbor_id",
+        )
+        .join(F.broadcast(qframe), "query_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            dot_double(F.col("qv"), F.col("cv")).alias("sim"),
+        )
+    )
+    return _top(refined, k)
+
+
 def pq_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -551,7 +614,7 @@ def pq_topk(
     vector is scored from its codes through a per-query inner-product
     lookup table (score = Σ_j LUT[q][j, codes[j]] ≈ cosine on the
     L2-normalized fixtures). Per-batch work is a numpy gather over the
-    codes — the corpus's float vectors are never read at query time,
+    codes — the corpus's float vectors are never read by the ADC pass,
     which is the point: at billion scale the scan touches m bytes per
     vector, not 4·d.
 
@@ -563,15 +626,15 @@ def pq_topk(
     times; this split is what the bench's *_steady entries measure.
 
     ``rerank_factor > 0`` adds the standard PQ refinement: the ADC pass
-    shortlists ``k·rerank_factor`` candidates per query, whose raw
-    vectors alone are fetched (broadcast-semi-join — I/O ∝ shortlist,
-    never corpus) and exact-ranked. Compression sets the scan cost,
-    reranking restores the precision.
+    shortlists ``k·rerank_factor`` candidates per query; the shortlist
+    is broadcast into one scan of the raw corpus vectors and only its
+    matches are exact-ranked (the scan still reads every vector).
+    Compression sets the ADC cost, reranking restores the precision.
 
     ``queries`` is a driver-small set (the recall-contract shape, same
     as brute_force_topk's broadcast assumption); batch large query
     workloads, or use lsh_topk/ivf_topk when the query side itself is
-    big.
+    big. An empty query set returns an empty frame.
     """
     from pyspark.sql.types import ArrayType, DoubleType
 
@@ -579,13 +642,9 @@ def pq_topk(
         codes_df, books = index
     else:
         codes_df, books = pq_index(corpus, vec_col, id_col, m, k_codes, iters)
-    q_rows = (
-        queries.select(F.col(id_col).alias("qid"), F.col(vec_col))
-        .orderBy("qid")
-        .collect()
-    )
-    qids = [r.qid for r in q_rows]
-    qv = np.array([list(r[1]) for r in q_rows], dtype=np.float64)  # Q × d
+    qids, qv = _collect_queries(queries, vec_col, id_col)  # Q × d
+    if not qids:
+        return _no_results(queries, id_col)
     ds = books.shape[2]
     # LUTs[qi, j, code] = <q_sub, codeword>
     luts = np.stack(
@@ -616,43 +675,8 @@ def pq_topk(
         .withColumn("query_id", qid_arr[F.col("qi")])
         .filter(F.col("query_id") != F.col("neighbor_id"))
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    shortlist_k = k * rerank_factor if rerank_factor > 0 else k
-    shortlist = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= shortlist_k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
-    if rerank_factor <= 0:
-        return shortlist
-
-    # exact refinement of the shortlist only: fetch just those vectors
-    cand_vecs = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-    ).join(
-        F.broadcast(shortlist.select("neighbor_id").distinct()),
-        "neighbor_id",
-        "left_semi",
-    )
-    qframe = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    refined = (
-        shortlist.select("query_id", "neighbor_id")
-        .join(F.broadcast(qframe), "query_id")
-        .join(cand_vecs, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            dot_double(F.col("qv"), F.col("cv")).alias("sim"),
-        )
-    )
-    return (
-        refined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
+    return _rank_shortlist(
+        corpus, queries, scored, k, rerank_factor, vec_col, id_col
     )
 
 
@@ -681,14 +705,15 @@ def ivfpq_topk(
     clusters, ``pq_index`` trains the codebooks, and the ADC pass scores
     codes only inside each query's probed clusters (a broadcast equi
     join on cluster — the per-query LUT gather never sees unprobed
-    lists). ``queries`` is driver-small (the recall-contract shape
-    shared by the other *_topk operators).
+    lists; the (query, cluster) probe table is a local relation).
+    ``queries`` is driver-small (the recall-contract shape shared by the
+    other *_topk operators); an empty query set returns an empty frame.
 
     ``residual=False`` (default): codes encode RAW vectors with one
     shared codebook — simpler plumbing at slightly lower ADC precision,
-    restored by the exact rerank of the shortlist (``rerank_factor``·k
-    candidates' raw vectors fetched by broadcast semi join; I/O ∝
-    shortlist).
+    restored by the exact rerank of the ``rerank_factor``·k shortlist
+    (broadcast into one scan of the raw corpus vectors, as in
+    :func:`pq_topk`).
 
     ``residual=True`` is the paper's IVFADC: the codebook is trained on
     and encodes ``v − centroid[cluster]`` — residuals concentrate near
@@ -707,7 +732,7 @@ def ivfpq_topk(
     (raw-encoded codes scored with a residual offset are garbage, and
     vice versa).
     """
-    from pyspark.sql.types import ArrayType, DoubleType, IntegerType
+    from pyspark.sql.types import DoubleType
 
     if index is not None:
         with_codes, centroids, books = index
@@ -717,13 +742,9 @@ def ivfpq_topk(
             residual,
         )
 
-    q_rows = (
-        queries.select(F.col(id_col).alias("qid"), F.col(vec_col))
-        .orderBy("qid")
-        .collect()
-    )
-    qids = [r.qid for r in q_rows]
-    qv = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
+    qids, qv = _collect_queries(queries, vec_col, id_col)
+    if not qids:
+        return _no_results(queries, id_col)
     ds = books.shape[2]
     luts = np.stack(
         [
@@ -738,12 +759,18 @@ def ivfpq_topk(
     )  # Q × m × k_codes
     probe_order = np.argsort(-(qv @ centroids.T), axis=1)[:, :nprobe]
 
+    # a typed pandas frame plans as a JVM-local relation under Arrow; a
+    # Python list would become a Python RDD, whose broadcast runs a
+    # Python-worker job on every call
+    per_q = probe_order.shape[1]
     q_probes = corpus.sparkSession.createDataFrame(
-        [
-            (int(qi), qids[qi], int(c))
-            for qi in range(len(qids))
-            for c in probe_order[qi]
-        ],
+        pandas.DataFrame(
+            {
+                "qi": np.repeat(np.arange(len(qids), dtype="int32"), per_q),
+                "query_id": np.repeat(np.asarray(qids, dtype="int64"), per_q),
+                "cluster": probe_order.ravel().astype("int32"),
+            }
+        ),
         "qi int, query_id long, cluster int",
     )
 
@@ -777,40 +804,6 @@ def ivfpq_topk(
             ),
         )
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    shortlist_k = k * rerank_factor if rerank_factor > 0 else k
-    shortlist = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= shortlist_k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
-    if rerank_factor <= 0:
-        return shortlist
-
-    cand_vecs = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-    ).join(
-        F.broadcast(shortlist.select("neighbor_id").distinct()),
-        "neighbor_id",
-        "left_semi",
-    )
-    qframe = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    refined = (
-        shortlist.select("query_id", "neighbor_id")
-        .join(F.broadcast(qframe), "query_id")
-        .join(cand_vecs, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            dot_double(F.col("qv"), F.col("cv")).alias("sim"),
-        )
-    )
-    return (
-        refined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
+    return _rank_shortlist(
+        corpus, queries, scored, k, rerank_factor, vec_col, id_col
     )

@@ -1302,6 +1302,25 @@ def test_embedding_index_evaluates_bucket_udf_once(embeddings, with_vectors):
     assert n_gen == 1 and n_udf == n_gen, plan
 
 
+@pytest.mark.parametrize("strategy", ["group", "pairs"])
+def test_embedding_neardup_bucketed_evaluates_bucket_udf_once(
+    embeddings, strategy
+):
+    """One Arrow UDF evaluation per posexplode in both strategies."""
+    import re
+
+    from changedatacapture_reporting_spark.operators.dedup import (
+        embedding_neardup_bucketed,
+    )
+
+    out = embedding_neardup_bucketed(embeddings, threshold=0.45,
+                                     strategy=strategy)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    n_udf = len(re.findall(r"\bArrowEvalPython\b", plan))
+    n_gen = len(re.findall(r"\bGenerate\b", plan))
+    assert n_gen >= 1 and n_udf == n_gen, plan
+
+
 def test_incremental_dedup_twins_leave_no_cached_relation(
     spark, documents, embeddings
 ):
@@ -1475,6 +1494,153 @@ def test_ivfpq_encode_residual_steady_roundtrip(spark, embeddings, tmp_path):
     assert sorted(map(tuple, trained.collect())) == sorted(
         map(tuple, steady.collect())
     )
+
+
+def test_ivfpq_steady_plan_ranks_the_shortlist_once(spark, embeddings, tmp_path):
+    """The steady-state query (``index=``, rerank on) scans no Python
+    RDD (the probe table is a local relation), feeds the shortlist into
+    one join (no reused exchange, no distinct) and runs the ADC UDF
+    once."""
+    import re
+
+    from changedatacapture_reporting_spark.operators.similarity import (
+        ivfpq_index,
+        ivfpq_topk,
+    )
+
+    with_codes, centroids, books = ivfpq_index(embeddings, m=16, k_codes=32)
+    with_codes.select("vec_id", "cluster", "codes").write.parquet(
+        str(tmp_path / "ivfpq")
+    )
+    out = ivfpq_topk(
+        embeddings, embeddings.filter(F.col("vec_id") < 10), k=10, nprobe=6,
+        rerank_factor=3,
+        index=(spark.read.parquet(str(tmp_path / "ivfpq")), centroids, books),
+    )
+    out.collect()
+    # AQE's final plan only: the string also carries the initial plan
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]
+    for op in ("ExistingRDD", "ReusedExchange", "HashAggregate"):
+        assert op not in plan, plan
+    assert len(re.findall(r"\bArrowEvalPython\b", plan)) == 1, plan
+
+
+def _exact_dot(a, b) -> float:
+    # the left fold of functions.vectors.dot_double, in double
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += x * y
+    return acc
+
+
+@pytest.mark.parametrize("residual", [False, True])
+def test_ivfpq_rerank_is_exact_top_k_of_adc_shortlist(embeddings, residual):
+    """The reranked top-k equals the exact-dot top-k (ties to the lower
+    id) over the ADC-only shortlist of k·rerank_factor: same ids, sims
+    and ranks."""
+    from changedatacapture_reporting_spark.operators.similarity import (
+        ivfpq_topk,
+    )
+
+    k, rf = 5, 3
+    q = embeddings.filter(F.col("vec_id") < 10)
+    kw = dict(n_centroids=16, nprobe=6, m=16, k_codes=32, residual=residual)
+    shortlist = ivfpq_topk(embeddings, q, k=k * rf, rerank_factor=0, **kw)
+    reranked = ivfpq_topk(embeddings, q, k=k, rerank_factor=rf, **kw)
+    got = {tuple(r) for r in reranked.collect()}
+
+    vecs = {r.vec_id: r.embedding for r in embeddings.collect()}
+    cands: dict[int, list] = {}
+    for r in shortlist.collect():
+        cands.setdefault(r.query_id, []).append(r.neighbor_id)
+    assert set(cands) == set(range(10))
+    want = set()
+    for qid, nids in cands.items():
+        assert len(nids) == k * rf
+        sims = sorted(
+            ((-_exact_dot(vecs[qid], vecs[n]), n) for n in nids)
+        )[:k]
+        want |= {(qid, n, -s, i + 1) for i, (s, n) in enumerate(sims)}
+    assert got == want
+
+
+@pytest.mark.parametrize("rerank_factor", [0, 3])
+@pytest.mark.parametrize("op", ["pq", "ivfpq"])
+def test_pq_topk_never_returns_the_query_itself(embeddings, op, rerank_factor):
+    """Queries drawn from the corpus: no row pairs a query with itself,
+    before or after the rerank, and every query still gets k rows."""
+    from changedatacapture_reporting_spark.operators.similarity import (
+        ivfpq_topk,
+        pq_topk,
+    )
+
+    q = embeddings.filter(F.col("vec_id") < 10)
+    if op == "pq":
+        out = pq_topk(embeddings, q, k=10, m=16, k_codes=32,
+                      rerank_factor=rerank_factor)
+    else:
+        out = ivfpq_topk(embeddings, q, k=10, nprobe=6, m=16, k_codes=32,
+                         rerank_factor=rerank_factor)
+    rows = out.collect()
+    assert all(r.query_id != r.neighbor_id for r in rows)
+    assert len(rows) == 10 * 10
+
+
+@pytest.mark.parametrize("op", ["pq", "ivfpq"])
+def test_pq_topk_skips_null_query_ids(embeddings, op):
+    """A query row with a null id adds no rows and breaks no other query."""
+    from changedatacapture_reporting_spark.operators.similarity import (
+        ivfpq_index,
+        ivfpq_topk,
+        pq_index,
+        pq_topk,
+    )
+
+    if op == "pq":
+        topk, index = pq_topk, pq_index(embeddings, m=16, k_codes=32)
+    else:
+        topk, index = ivfpq_topk, ivfpq_index(embeddings, m=16, k_codes=32)
+    q = embeddings.filter(F.col("vec_id") < 3)
+    null_q = embeddings.filter(F.col("vec_id") == 5).withColumn(
+        "vec_id", F.lit(None).cast("long")
+    )
+
+    def rows(queries):
+        out = topk(embeddings, queries, k=10, rerank_factor=3, index=index)
+        return sorted(map(tuple, out.collect()))
+
+    assert rows(q.unionByName(null_q)) == rows(q)
+
+@pytest.mark.parametrize("rerank_factor", [0, 3])
+@pytest.mark.parametrize("op", ["pq", "ivfpq"])
+def test_pq_topk_empty_query_set(embeddings, op, rerank_factor):
+    """No query rows: an empty frame with the usual columns, not a
+    LUT-stacking error."""
+    from changedatacapture_reporting_spark.operators.similarity import (
+        ivfpq_index,
+        ivfpq_topk,
+        pq_index,
+        pq_topk,
+    )
+
+    if op == "pq":
+        topk, index = pq_topk, pq_index(embeddings, m=16, k_codes=32)
+    else:
+        topk, index = ivfpq_topk, ivfpq_index(embeddings, m=16, k_codes=32)
+
+    def run(q):
+        return topk(embeddings, q, k=10, rerank_factor=rerank_factor,
+                    index=index)
+
+    empty = run(embeddings.filter(F.col("vec_id") < 0))
+    normal = run(embeddings.filter(F.col("vec_id") < 2))
+    assert empty.collect() == []
+    assert empty.columns == ["query_id", "neighbor_id", "sim", "rank"]
+    # pq_topk types query_id by its id literals (int for ids < 2^31);
+    # with no ids the empty frame types it like the id column
+    skip = 1 if op == "pq" else 0
+    assert empty.dtypes[skip:] == normal.dtypes[skip:]
 
 
 def test_null_text_equals_empty_text_at_the_primitives(spark):
