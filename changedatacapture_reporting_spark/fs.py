@@ -121,12 +121,16 @@ def exists(spark: SparkSession, path: str) -> bool:
 
 
 def mkdirs(spark: SparkSession, path: str) -> None:
+    """Create ``path`` and its missing parents (present already is fine).
+    Raises ``OSError`` when the FileSystem reports the directory was not
+    made, as ``os.makedirs`` does."""
     h = _hadoop(spark, path)
     if h is None:
         os.makedirs(path, exist_ok=True)
         return
     fs, jpath = h
-    fs.mkdirs(jpath)
+    if not fs.mkdirs(jpath):
+        raise OSError(f"mkdirs failed: {path}")
 
 
 def mtime_ms(spark: SparkSession, path: str) -> int:

@@ -46,41 +46,68 @@ from changedatacapture_reporting_spark.schema import (
     OP_INSERT,
     OP_UPDATE,
 )
+from changedatacapture_reporting_spark.sqltext import sql_ident, sql_str
 
 
-def _erase(col: Column, flags: CompatFlags) -> Column:
-    """Type-erase a value to string (populate:271–277 SQL_VARIANT→VARCHAR).
+def _erased(field: str, flags: CompatFlags) -> str:
+    """SQL text type-erasing ``field`` to string (populate:271–277
+    SQL_VARIANT→VARCHAR).
 
     The 128-char truncation is reference-faithful only behind
     ``flags.truncate128`` (it silently corrupts long values).
     """
-    s = col.cast("string")
-    return F.substring(s, 1, 128) if flags.truncate128 else s
+    s = f"CAST({field} AS STRING)"
+    return f"substring({s}, 1, 128)" if flags.truncate128 else s
 
 
-def _pk_cols(pk_names: list[str]) -> list[Column]:
-    """PK carry-through: before-image for updates/deletes, after for inserts.
+def _erase(field: str, flags: CompatFlags) -> Column:
+    """:func:`_erased` as a Column."""
+    return F.expr(_erased(field, flags))
+
+
+def _image_field(image: str, name: str) -> str:
+    """SQL text of field ``name`` of the struct column ``image``."""
+    return f"{sql_ident(image)}.{sql_ident(name)}"
+
+
+def _pk_value(k: str) -> str:
+    """PK carry-through: before-image for updates/deletes, after for
+    inserts.
 
     Mirrors the reference taking updates' PKs from ``up_b`` (populate:292)
     and each marker's PKs from its own row image (populate:369, 380).
     """
-    return [
-        F.coalesce(F.col(f"before.{k}"), F.col(f"after.{k}")).alias(k)
-        for k in pk_names
-    ]
+    return f"coalesce({_image_field('before', k)}, {_image_field('after', k)})"
 
 
-def _pk_json(pk_names: list[str]) -> Column:
+def _pk_json(pk_names: list[str]) -> str:
     """Canonical composite-PK string (replaces the reference's lossy
     INT-typed PK columns, populate:95–97)."""
-    return F.to_json(
-        F.struct(
-            *[
-                F.coalesce(F.col(f"before.{k}"), F.col(f"after.{k}")).alias(k)
-                for k in pk_names
-            ]
-        )
+    fields = ", ".join(f"{sql_str(k)}, {_pk_value(k)}" for k in pk_names)
+    return f"to_json(named_struct({fields}))"
+
+
+def _entry(column_name: str, old: str, new: str, changed: str = "true") -> str:
+    """One (column_name, old_value, new_value, changed) entry struct; the
+    trailing ``changed`` flag is dropped at the final projection."""
+    return (
+        f"named_struct('column_name', {column_name}, 'old_value', {old}, "
+        f"'new_value', {new}, 'changed', {changed})"
     )
+
+
+def _changed_entries(value_cols: list[str], flags: CompatFlags) -> str:
+    """SQL text of :func:`changed_column_entries`."""
+    entries = ", ".join(
+        _entry(
+            sql_str(c),
+            _erased(_image_field("before", c), flags),
+            _erased(_image_field("after", c), flags),
+            f"NOT ({_image_field('before', c)} <=> {_image_field('after', c)})",
+        )
+        for c in value_cols
+    )
+    return f"filter(array({entries}), e -> e.changed)"
 
 
 def changed_column_entries(
@@ -91,26 +118,12 @@ def changed_column_entries(
 
     This is the reference's P2 changed-column mask (populate:302–310) fused
     with both UNPIVOTs (populate:321, 354): the bitmask probe becomes a
-    null-safe inequality, and ``F.filter`` prunes unchanged columns *inside*
+    null-safe inequality, and ``filter`` prunes unchanged columns *inside*
     the array before ``explode`` ever materializes a row — the same effect
     as UNPIVOT dropping the masked NULLs, without emitting n_cols rows per
     update first.
     """
-    flags = flags or CompatFlags()
-    entries = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("column_name"),
-                _erase(F.col(f"before.{c}"), flags).alias("old_value"),
-                _erase(F.col(f"after.{c}"), flags).alias("new_value"),
-                (~F.col(f"before.{c}").eqNullSafe(F.col(f"after.{c}"))).alias(
-                    "changed"
-                ),
-            )
-            for c in value_cols
-        ]
-    )
-    return F.filter(entries, lambda e: e["changed"])
+    return F.expr(_changed_entries(value_cols, flags or CompatFlags()))
 
 
 def build_changelog(
@@ -149,62 +162,50 @@ def build_changelog(
         value_cols = [f.name for f in events.schema["after"].dataType.fields]
     carry_cols = carry_cols or []
 
-    base = [
-        *[F.col(c) for c in carry_cols],
-        F.col("commit_ts").alias("commit_time"),
-        F.col("table_name"),
-        *_pk_cols(pk_cols),
-        _pk_json(pk_cols).alias("pk_json"),
-    ]
-
     # SINGLE-PASS plan: one CASE-on-op entries array per event, one explode,
     # no union. The union-of-filtered-branches formulation reads the source
     # 3× (Spark does not share scans across union branches) — ruinous when
     # the source is 100 TB of parquet or a from_json over Debezium bytes.
-    null_s = F.lit(None).cast("string")
-
-    def _entry(column_name: Column, old: Column, new: Column) -> Column:
-        # same struct shape as changed_column_entries (the trailing
-        # `changed` flag is dropped at the final projection)
-        return F.struct(
-            column_name.alias("column_name"),
-            old.alias("old_value"),
-            new.alias("new_value"),
-            F.lit(True).alias("changed"),
-        )
-
-    insert_entries = F.array(_entry(null_s, null_s, F.lit(NEW_RECORD)))
+    # Every expression is SQL text: one parse per projection instead of
+    # several py4j round trips per Column-builder call, per value column.
+    null_s = "CAST(NULL AS STRING)"
+    insert_entries = f"array({_entry(null_s, null_s, sql_str(NEW_RECORD))})"
     if record_insert_images:
-        image_entries = F.filter(
-            F.array(
-                *[
-                    _entry(F.lit(c), null_s, _erase(F.col(f"after.{c}"), flags))
-                    for c in value_cols
-                ]
-            ),
-            lambda e: e["new_value"].isNotNull(),
+        images = ", ".join(
+            _entry(sql_str(c), null_s, _erased(_image_field("after", c), flags))
+            for c in value_cols
         )
-        insert_entries = F.concat(insert_entries, image_entries)
-
+        insert_entries = (
+            f"concat({insert_entries}, "
+            f"filter(array({images}), e -> e.new_value IS NOT NULL))"
+        )
+    deleted = f"array({_entry(null_s, sql_str(DELETED_RECORD), null_s)})"
+    # unknown ops → NULL array → explode emits nothing
     entries = (
-        F.when(F.col("op") == OP_UPDATE, changed_column_entries(value_cols, flags))
-        .when(
-            F.col("op") == OP_DELETE,
-            F.array(_entry(null_s, F.lit(DELETED_RECORD), null_s)),
-        )
-        .when(F.col("op") == OP_INSERT, insert_entries)
-        # unknown ops → NULL array → explode emits nothing
+        f"CASE WHEN op = {sql_str(OP_UPDATE)} "
+        f"THEN {_changed_entries(value_cols, flags)} "
+        f"WHEN op = {sql_str(OP_DELETE)} THEN {deleted} "
+        f"WHEN op = {sql_str(OP_INSERT)} THEN {insert_entries} END"
     )
 
-    out = events.select(*base, F.explode(entries).alias("e")).select(
-        *carry_cols,
+    carry = [sql_ident(c) for c in carry_cols]
+    pks = [sql_ident(k) for k in pk_cols]
+    out = events.selectExpr(
+        *carry,
+        "commit_ts AS commit_time",
+        "table_name",
+        *[f"{_pk_value(k)} AS {q}" for k, q in zip(pk_cols, pks)],
+        f"{_pk_json(pk_cols)} AS pk_json",
+        f"explode({entries}) AS e",
+    ).selectExpr(
+        *carry,
         "commit_time",
         "table_name",
-        *pk_cols,
+        *pks,
         "pk_json",
-        F.col("e.column_name").alias("column_name"),
-        F.col("e.old_value").alias("old_value"),
-        F.col("e.new_value").alias("new_value"),
+        "e.column_name AS column_name",
+        "e.old_value AS old_value",
+        "e.new_value AS new_value",
     )
 
     if with_audit_cols:
@@ -267,7 +268,7 @@ def pair_update_images(
         stack_args: list[Column] = []
         for c in value_cols:
             stack_args.append(F.lit(c))
-            stack_args.append(_erase(F.col(f"image.{c}"), flags))
+            stack_args.append(_erase(_image_field("image", c), flags))
         melted = df.select(
             "lsn",
             "seq",

@@ -445,8 +445,8 @@ def embedding_neardup_pairs(
     L2-normalized in the fixtures, so dot = cosine).
 
     All-pairs form — the verification path. The scale path buckets by
-    random-hyperplane LSH first (see similarity.lsh_bucket_ids) so the
-    self-join key is the bucket, not a cross join.
+    random-hyperplane LSH first (see similarity.lsh_buckets_vectorized)
+    so the self-join key is the bucket, not a cross join.
     """
     a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
     b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))

@@ -31,6 +31,7 @@ from __future__ import annotations
 import uuid
 from dataclasses import dataclass
 
+import pandas
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,6 +39,7 @@ from pyspark.sql import functions as F
 from changedatacapture_reporting_spark import fs
 from changedatacapture_reporting_spark.config import CompatFlags
 from changedatacapture_reporting_spark.operators.changelog import build_changelog
+from changedatacapture_reporting_spark.sqltext import sql_str
 
 STAGING_ROOT = "_staging"
 
@@ -59,6 +61,25 @@ def _meta_path(sink_path: str) -> str:
 
 
 _SIDECAR_SCHEMA = "table_name string, lsn long, run_id string"
+
+
+def _sidecar_rows(spark: SparkSession, per_table: list, run_id: str) -> DataFrame:
+    """One sidecar row per ``(table_name, lsn)`` of ``per_table``, tagged
+    ``run_id``. Built from a typed pandas frame, which plans as a JVM-
+    local relation under the session's Arrow setting; a Python list
+    would become a Python RDD, a Python-worker job on every commit."""
+    return spark.createDataFrame(
+        pandas.DataFrame(
+            {
+                "table_name": pandas.Series(
+                    [r.table_name for r in per_table], dtype=object
+                ),
+                "lsn": pandas.Series([r.lsn for r in per_table], dtype="int64"),
+                "run_id": pandas.Series([run_id] * len(per_table), dtype=object),
+            }
+        ),
+        _SIDECAR_SCHEMA,
+    )
 
 
 def _sink_watermarks(spark: SparkSession, sink_path: str) -> dict[str, int] | None:
@@ -294,9 +315,9 @@ def commit_batch(
     # not coalesce: coalesce(1) over the 32-slice local relation pays a
     # fixed per-merged-parent cost (~4s/call measured on local[32]); the
     # one-row shuffle is free.
-    spark.createDataFrame(
-        [(r.table_name, r.lsn, run_id) for r in per_table], _SIDECAR_SCHEMA
-    ).repartition(1).write.mode("append").parquet(_meta_path(sink_path))
+    _sidecar_rows(spark, per_table, run_id).repartition(1).write.mode(
+        "append"
+    ).parquet(_meta_path(sink_path))
 
     _publish(spark, staging, sink_path)
     return rows_changed
@@ -602,11 +623,15 @@ def _populate(
         )
     elif wm is not None:
         # literal per-table thresholds (no file-source dependency — see
-        # _sink_watermarks); unknown tables pass through as first-load
-        wm_col = F.create_map(
-            *[F.lit(x) for kv in wm.items() for x in kv]
-        )[F.col("table_name")]
-        batch = events.filter(wm_col.isNull() | (F.col("lsn") > wm_col))
+        # _sink_watermarks), as one SQL map; unknown tables pass through
+        # as first-load
+        wm_map = "map({})[table_name]".format(
+            ", ".join(
+                f"{sql_str(t)}, {'NULL' if v is None else int(v)}"
+                for t, v in wm.items()
+            )
+        )
+        batch = events.filter(f"{wm_map} IS NULL OR lsn > {wm_map}")
     else:
         batch = events
 

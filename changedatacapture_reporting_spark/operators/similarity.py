@@ -76,55 +76,20 @@ def brute_force_topk(
 
 def _plane(table: int, plane: int, dim: int) -> list[float]:
     """Deterministic hyperplane: seeded Mersenne-Twister draws in
-    [-0.5, 0.5), generated at PLAN time and embedded as a literal array —
-    per-row work is then just a zip_with dot product, no hashing. The seed
-    is a function of (table, plane) so results are reproducible across
-    runs and cluster layouts."""
+    [-0.5, 0.5), generated at PLAN time and shipped in the bucket UDF's
+    closure — per-row work is then one matmul column, no hashing. The
+    seed is a function of (table, plane) so results are reproducible
+    across runs and cluster layouts."""
     rng = random.Random(1_000_003 * table + plane)
     return [rng.random() - 0.5 for _ in range(dim)]
 
 
-def lsh_bucket_ids(
-    vec: Column, tables: int = 12, planes: int = 4, dim: int = 64
-) -> Column:
-    """array<struct<table:int, bucket:long>> — sign-of-projection bits per
-    table. Pure expression: usable on both streaming and batch frames."""
-    def bucket(t: int) -> Column:
-        bits = [
-            F.when(
-                F.aggregate(
-                    F.zip_with(
-                        vec,
-                        F.array(*[F.lit(c) for c in _plane(t, p, dim)]),
-                        lambda x, c: x.cast("double") * c,
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-                > 0,
-                F.lit(1 << p),
-            ).otherwise(F.lit(0))
-            for p in range(planes)
-        ]
-        total = bits[0]
-        for b in bits[1:]:
-            total = total + b
-        return total.cast("long")
-
-    return F.array(
-        *[
-            F.struct(F.lit(t).alias("table"), bucket(t).alias("bucket"))
-            for t in range(tables)
-        ]
-    )
-
-
 def lsh_buckets_vectorized(tables: int = 12, planes: int = 4, dim: int = 64):
-    """Arrow-vectorized bucket computation: one numpy matmul per batch
-    (n×dim @ dim×(tables·planes)) instead of interpreted per-element
-    lambdas — ~10× faster than the expression form and the idiomatic
-    Spark answer for dense linear algebra (Pandas UDF over Arrow batches).
-    Returns a pandas_udf: array<float> → array<long> (bucket per table).
+    """Random-hyperplane LSH buckets: sign-of-projection bits per table,
+    one numpy matmul per Arrow batch (n×dim @ dim×(tables·planes)) — the
+    idiomatic Spark answer for dense linear algebra (Pandas UDF over
+    Arrow batches). Returns a pandas_udf: array<float> → array<long>
+    (bucket per table).
     """
     from pyspark.sql.types import ArrayType, LongType
 
@@ -666,7 +631,11 @@ def pq_topk(
         return pandas.Series(list(out))
 
     score_udf = F.pandas_udf(score, ArrayType(DoubleType()))
-    qid_arr = F.array(*[F.lit(q) for q in qids])
+    # typed like the id column: the literals alone would type by
+    # magnitude (int below 2^31, bigint above)
+    qid_arr = F.array(*[F.lit(q) for q in qids]).cast(
+        ArrayType(queries.schema[id_col].dataType)
+    )
     scored = (
         codes_df.select(
             F.col(id_col).alias("neighbor_id"),

@@ -57,6 +57,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from changedatacapture_reporting_spark import fs, logstore
+from changedatacapture_reporting_spark.sqltext import sql_str
 from changedatacapture_reporting_spark.sources import dvcodec
 
 LOG_DIR = "_delta_log"
@@ -1264,11 +1265,6 @@ def _pos_key_expr(n_segments: int):
     return F.url_decode(F.replace(raw, F.lit("+"), F.lit("%2B")))
 
 
-def _sql_str(s: str) -> str:
-    """``s`` as a Spark SQL string literal."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
 def _live_file_filter(
     spark: SparkSession, scan: DataFrame, keys: list[str]
 ):
@@ -1313,7 +1309,7 @@ def _live_file_filter(
     return F.expr(
         " OR ".join(
             f"substring_index(_metadata.file_path, '/', -{n}) IN "
-            f"({', '.join(map(_sql_str, sorted(raws)))})"
+            f"({', '.join(map(sql_str, sorted(raws)))})"
             for n, raws in sorted(found.items())
         )
     )
@@ -3317,6 +3313,7 @@ def write_delta(
     partition_by = partition_by or []
 
     versions = table_versions(spark, path)
+    state0: dict | None = None
     if versions:
         # refuse BEFORE staging any data: the loop's check still guards
         # races, but failing early avoids promoting orphan files into a
@@ -3498,7 +3495,13 @@ def write_delta(
         prior_files: list[str] = []
         evolved_meta: dict | None = None
         if versions:
-            prior = _resolve_log(spark, path, None)
+            # a log version is immutable: until a newer one lands (a
+            # concurrent commit, or the winner of a race this loop lost)
+            # the state read before staging is still the latest
+            if state0 is not None and versions[-1] == state0["version"]:
+                prior = state0
+            else:
+                prior = _resolve_log(spark, path, None)
             _check_write_protocol(prior, path)
             if mode == "overwrite":
                 _check_append_only(prior, path)
@@ -3524,7 +3527,7 @@ def write_delta(
                 return None
             meta = prior["meta"]
             if _table_constraints(meta) != _table_constraints(
-                state0["meta"]
+                state0 and state0["meta"]
             ):
                 # a concurrent ADD/DROP CONSTRAINT landed while this
                 # batch was staging: the pre-staging enforcement ran
@@ -4434,7 +4437,9 @@ def optimize_delta(
     ``zorder_sampling=False`` keeps the r12 zero-extra-pass linear
     bucketing from the committed stats bounds (skew costs tightness,
     never correctness — also the automatic fallback when a z column is
-    all-NULL in a group). Numeric, date and timestamp columns only.
+    all-NULL in a group). Numeric, date and timestamp columns only. One
+    ZORDER pass splits a group into at most 256 files: a group whose
+    byte total asks for more is still z-ordered, into 256 larger files.
 
     Data stays distributed: each partition group is one ``coalesce``
     (or one range shuffle, for ZORDER) rewrite sized from the group's

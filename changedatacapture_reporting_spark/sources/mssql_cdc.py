@@ -31,6 +31,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from changedatacapture_reporting_spark.sqltext import sql_ident, sql_str
 
 OP_DELETE_ROW = 1  # populate:375
 OP_INSERT_ROW = 2  # populate:386
@@ -93,37 +96,42 @@ def mssql_rows_to_events(
     image). ``commit_ts`` may be present, or supplied via ``lsn_time_map``.
     """
     base = rows.withColumn("lsn", parse_lsn(F.col("`__$start_lsn`"))).withColumn(
-        "seq", F.col("`__$seqval`").cast("long")
+        "seq", F.expr("CAST(`__$seqval` AS BIGINT)")
     )
     if lsn_time_map is not None:
         base = with_commit_time(base, lsn_time_map)
 
-    image = F.struct(*[F.col(c) for c in image_cols])
-    common = ["lsn", "seq", "commit_ts", "table_name"]
-    op = F.col("`__$operation`")
-
-    deletes = base.filter(op == OP_DELETE_ROW).select(
-        *common,
-        F.lit("delete").alias("op"),
-        image.alias("before"),
-        F.lit(None).cast(base.select(image).schema[0].dataType).alias("after"),
+    # the row image and its typed NULL as SQL text, typed from the input
+    # schema (a name matches exactly, else case-insensitively, as Spark
+    # resolves it): each branch is then one filter and one selectExpr
+    exact = {f.name: f for f in rows.schema.fields}
+    folded = {f.name.lower(): f for f in rows.schema.fields}
+    fields = [exact.get(c) or folded[c.lower()] for c in image_cols]
+    image = "named_struct({})".format(
+        ", ".join(f"{sql_str(f.name)}, {sql_ident(f.name)}" for f in fields)
     )
-    inserts = base.filter(op == OP_INSERT_ROW).select(
-        *common,
-        F.lit("insert").alias("op"),
-        F.lit(None).cast(base.select(image).schema[0].dataType).alias("before"),
-        image.alias("after"),
+    no_image = f"CAST(NULL AS STRUCT<{T.StructType(fields).toDDL()}>)"
+    common = ["lsn", "seq", "commit_ts", "table_name"]
+
+    def rows_of(op: int) -> DataFrame:
+        return base.filter(f"`__$operation` = {op}")
+
+    deletes = rows_of(OP_DELETE_ROW).selectExpr(
+        *common, "'delete' AS op", f"{image} AS before", f"{no_image} AS after"
+    )
+    inserts = rows_of(OP_INSERT_ROW).selectExpr(
+        *common, "'insert' AS op", f"{no_image} AS before", f"{image} AS after"
     )
     # 3⋈4 pairing on (lsn, seq) — one row per update, seqval included
-    before_rows = base.filter(op == OP_UPDATE_BEFORE).select(
-        *common, image.alias("before")
+    before_rows = rows_of(OP_UPDATE_BEFORE).selectExpr(
+        *common, f"{image} AS before"
     )
-    after_rows = base.filter(op == OP_UPDATE_AFTER).select(
-        "lsn", "seq", image.alias("after")
+    after_rows = rows_of(OP_UPDATE_AFTER).selectExpr(
+        "lsn", "seq", f"{image} AS after"
     )
-    updates = before_rows.join(after_rows, on=["lsn", "seq"], how="inner").select(
-        *common, F.lit("update").alias("op"), "before", "after"
-    )
+    updates = before_rows.join(
+        after_rows, on=["lsn", "seq"], how="inner"
+    ).selectExpr(*common, "'update' AS op", "before", "after")
 
     out = updates.unionByName(deletes).unionByName(inserts)
     return out.select(

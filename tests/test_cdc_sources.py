@@ -449,3 +449,82 @@ def test_kafka_tombstones_are_dropped_not_dead_lettered(spark):
     dlq = kafka_dead_letters(tagged).collect()
     assert len(dlq) == 1 and dlq[0]["reject_reason"] == "unparseable"
     assert dlq[0]["offset"] == 102  # the replay address survives
+
+
+def test_mssql_rows_hostile_names_through_populate(spark, tmp_path):
+    """Image columns named ``a`b``, ``x.y``, ``has space`` and ``it's``
+    and a table named ``o'brien`` pair into exact events, and the table
+    resumes through the populate watermark map: a second run loads only
+    what lies past its first run's LSN."""
+    from changedatacapture_reporting_spark.operators.populate import (
+        populate_changelog,
+    )
+    from changedatacapture_reporting_spark.sources.delta_table import read_delta
+
+    def lsn(n):
+        return "0x" + "0" * 19 + str(n)
+
+    cols = ["id", "a`b", "x.y", "has space", "it's"]
+    rows = [
+        (lsn(1), 0, 2, 0, "o'brien", 1, "p", "q", None, "it's"),
+        (lsn(1), 1, 2, 0, "plain", 7, "u", "v", "w", None),
+        (lsn(2), 0, 3, 0, "o'brien", 1, "p", "q", None, "it's"),
+        (lsn(2), 0, 4, 0, "o'brien", 1, "p2", "q", "now", "it's"),
+        (lsn(3), 0, 1, 0, "o'brien", 1, "p2", "q", "now", "it's"),
+        (lsn(3), 1, 3, 0, "plain", 7, "u", "v", "w", None),
+        (lsn(3), 1, 4, 0, "plain", 7, "u", "v2", "w", None),
+    ]
+    schema = (
+        "`__$start_lsn` string, `__$seqval` long, `__$operation` int,"
+        " `__$update_mask` long, table_name string, id int, `a``b` string,"
+        " `x.y` string, `has space` string, `it's` string"
+    )
+    ts_map = spark.createDataFrame(
+        [(n, dt.datetime(2024, 1, n)) for n in (1, 2, 3)],
+        "lsn long, commit_ts timestamp",
+    )
+    events = mssql_rows_to_events(
+        spark.createDataFrame(rows, schema), cols, ts_map
+    )
+    assert events.schema["after"].dataType.fieldNames() == cols
+    got = sorted(
+        (r.lsn, r.seq, r.op, r.table_name,
+         r.before and tuple(r.before), r.after and tuple(r.after))
+        for r in events.collect()
+    )
+    v1 = (1, "p", "q", None, "it's")
+    v2 = (1, "p2", "q", "now", "it's")
+    assert got == [
+        (1, 0, "insert", "o'brien", None, v1),
+        (1, 1, "insert", "plain", None, (7, "u", "v", "w", None)),
+        (2, 0, "update", "o'brien", v1, v2),
+        (3, 0, "delete", "o'brien", v2, None),
+        (3, 1, "update", "plain", (7, "u", "v", "w", None),
+         (7, "u", "v2", "w", None)),
+    ]
+
+    sink = str(tmp_path / "sink")
+    kw = dict(maintain_rollup=False, sink_format="delta")
+    first = populate_changelog(spark, events, sink, ["id"], to_lsn=2, **kw)
+    assert first.rows_changed == 4  # 2 insert markers + 2 changed columns
+    second = populate_changelog(spark, events, sink, ["id"], **kw)
+    assert second.from_lsn == 2
+    assert second.rows_changed == 2  # the delete marker + x.y of 'plain'
+    out = sorted((
+        (r.lsn, r.table_name, r.column_name, r.old_value, r.new_value)
+        for r in read_delta(spark, sink).collect()
+    ), key=repr)
+    assert out == sorted(
+        [
+            (1, "o'brien", None, None, "NEW RECORD"),
+            (1, "plain", None, None, "NEW RECORD"),
+            (2, "o'brien", "a`b", "p", "p2"),
+            (2, "o'brien", "has space", None, "now"),
+            (3, "o'brien", None, "DELETED RECORD", None),
+            (3, "plain", "x.y", "v", "v2"),
+        ],
+        key=repr,
+    )
+    # a rerun finds nothing past either table's watermark
+    again = populate_changelog(spark, events, sink, ["id"], **kw)
+    assert again.rows_changed == 0

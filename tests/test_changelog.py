@@ -256,3 +256,184 @@ def test_byte_compat_schema_mirrors_reference_ddl(spark, cdc_fixture):
     lean = build_changelog(cdc_fixture, PK)
     assert "changelog_id" not in lean.columns
     assert "modified_dt" not in lean.columns
+
+
+# value columns whose names would break naive SQL splicing: a backtick,
+# a dot (a nested-field path when unquoted), a space and a quote
+HOSTILE = ["a`b", "x.y", "has space", "it's"]
+
+
+def _hostile_events(spark, images):
+    """One insert, one update and one delete of row id=1 of table
+    ``o'brien`` over the ``HOSTILE`` value columns; ``images`` holds
+    the three successive row images (id first)."""
+    import datetime as dt
+
+    from pyspark.sql import types as T
+
+    src = T.StructType(
+        [T.StructField("id", T.IntegerType())]
+        + [T.StructField(c, T.StringType()) for c in HOSTILE]
+    )
+    schema = T.StructType(
+        [
+            T.StructField("lsn", T.LongType()),
+            T.StructField("seq", T.LongType()),
+            T.StructField("commit_ts", T.TimestampType()),
+            T.StructField("op", T.StringType()),
+            T.StructField("table_name", T.StringType()),
+            T.StructField("before", src),
+            T.StructField("after", src),
+        ]
+    )
+    v1, v2 = images
+    return spark.createDataFrame(
+        [
+            (1, 0, dt.datetime(2024, 1, 1), "insert", "o'brien", None, v1),
+            (2, 0, dt.datetime(2024, 1, 2), "update", "o'brien", v1, v2),
+            (3, 0, dt.datetime(2024, 1, 3), "delete", "o'brien", v2, None),
+        ],
+        schema,
+    )
+
+
+def _exact(df):
+    return sorted(
+        (
+            (r.lsn, r.table_name, r.id, r.pk_json, r.column_name,
+             r.old_value, r.new_value)
+            for r in df.collect()
+        ),
+        key=repr,
+    )
+
+
+def test_hostile_names_exact_rows(spark):
+    """Column and table names that need quoting reach the output as
+    data: every changed column by its exact name, values (quotes and
+    backslashes included) unchanged."""
+    v1 = (1, "p", "q", None, "it's 'quoted'")
+    v2 = (1, "p2", "q", "now", "back\\slash")
+    events = _hostile_events(spark, (v1, v2))
+    log = build_changelog(
+        events, ["id"], carry_cols=["lsn"], with_audit_cols=False
+    )
+    pk = '{"id":1}'
+    assert log.columns == [
+        "lsn", "commit_time", "table_name", "id", "pk_json",
+        "column_name", "old_value", "new_value",
+    ]
+    assert _exact(log) == sorted(
+        [
+            (1, "o'brien", 1, pk, None, None, NEW_RECORD),
+            (2, "o'brien", 1, pk, "a`b", "p", "p2"),
+            (2, "o'brien", 1, pk, "has space", None, "now"),
+            (2, "o'brien", 1, pk, "it's", "it's 'quoted'", "back\\slash"),
+            (3, "o'brien", 1, pk, None, DELETED_RECORD, None),
+        ],
+        key=repr,
+    )
+
+    # record_insert_images: one (column, NULL, value) row per non-null
+    # column of the insert, beside its marker
+    images = build_changelog(
+        events, ["id"], carry_cols=["lsn"], with_audit_cols=False,
+        record_insert_images=True,
+    )
+    assert _exact(images.filter("lsn = 1")) == sorted(
+        [
+            (1, "o'brien", 1, pk, None, None, NEW_RECORD),
+            (1, "o'brien", 1, pk, "id", None, "1"),
+            (1, "o'brien", 1, pk, "a`b", None, "p"),
+            (1, "o'brien", 1, pk, "x.y", None, "q"),
+            (1, "o'brien", 1, pk, "it's", None, "it's 'quoted'"),
+        ],
+        key=repr,
+    )
+    assert _exact(images.filter("lsn > 1")) == _exact(log.filter("lsn > 1"))
+
+
+def test_truncate128_exact_rows_with_insert_images(spark):
+    """``truncate128`` cuts both sides of an update and every insert
+    image to 128 characters; change detection still compares the full
+    values (a difference past character 128 is a change row whose two
+    sides read equal, as in the reference)."""
+    long_a, long_b = "a" * 200, "a" * 150 + "b" * 50
+    v1 = (1, long_a, "q", long_a, None)
+    v2 = (1, long_b, "q", long_a, "short")
+    events = _hostile_events(spark, (v1, v2))
+    log = build_changelog(
+        events, ["id"], flags=CompatFlags(truncate128=True),
+        carry_cols=["lsn"], with_audit_cols=False, record_insert_images=True,
+    )
+    pk = '{"id":1}'
+    cut = "a" * 128
+    assert _exact(log) == sorted(
+        [
+            (1, "o'brien", 1, pk, None, None, NEW_RECORD),
+            (1, "o'brien", 1, pk, "id", None, "1"),
+            (1, "o'brien", 1, pk, "a`b", None, cut),
+            (1, "o'brien", 1, pk, "x.y", None, "q"),
+            (1, "o'brien", 1, pk, "has space", None, cut),
+            (2, "o'brien", 1, pk, "a`b", cut, cut),
+            (2, "o'brien", 1, pk, "it's", None, "short"),
+            (3, "o'brien", 1, pk, None, DELETED_RECORD, None),
+        ],
+        key=repr,
+    )
+
+
+def _py4j_calls(spark, fn) -> int:
+    """py4j round trips ``fn()`` makes through the session's gateway."""
+    client = spark.sparkContext._gateway._gateway_client
+    calls = [0]
+    send = client.send_command
+
+    def counted(*args, **kwargs):
+        calls[0] += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counted
+    try:
+        fn()
+    finally:
+        del client.send_command
+    return calls[0]
+
+
+def test_build_changelog_plan_cost_is_flat_in_columns(spark):
+    """Building the changelog plan is a fixed handful of JVM calls: the
+    per-column expressions are SQL text parsed once per projection, not
+    one Column-builder call (several py4j round trips each) per column
+    and entry field."""
+    from pyspark.sql import types as T
+
+    def events(n_values: int):
+        src = T.StructType(
+            [T.StructField("id", T.LongType())]
+            + [T.StructField(f"c{i}", T.StringType()) for i in range(n_values)]
+        )
+        return spark.createDataFrame(
+            [],
+            T.StructType(
+                [
+                    T.StructField("lsn", T.LongType()),
+                    T.StructField("seq", T.LongType()),
+                    T.StructField("commit_ts", T.TimestampType()),
+                    T.StructField("op", T.StringType()),
+                    T.StructField("table_name", T.StringType()),
+                    T.StructField("before", src),
+                    T.StructField("after", src),
+                ]
+            ),
+        )
+
+    def build(df):
+        return build_changelog(df, ["id"], carry_cols=["lsn", "seq"])
+
+    build(events(12))  # warm: first-use class lookups
+    e12, e48 = events(12), events(48)
+    n12 = _py4j_calls(spark, lambda: build(e12))
+    n48 = _py4j_calls(spark, lambda: build(e48))
+    assert n12 < 300, n12
+    assert n48 - n12 < 20, (n12, n48)

@@ -405,3 +405,21 @@ def test_move_file_raises_when_rename_fails(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(fs, "_hadoop", lambda spark, path: (RefusingFs(), None))
     with pytest.raises(OSError, match="rename failed"):
         fs.move_file(spark, src, dst)
+
+
+def test_mkdirs_raises_when_the_filesystem_refuses(spark, tmp_path, monkeypatch):
+    """Hadoop's ``FileSystem.mkdirs`` reports failure by returning
+    ``false`` (HDFS, object stores); that must raise, as ``os.makedirs``
+    does, instead of letting a commit proceed into a missing dir."""
+    made = f"file://{tmp_path}/a/b"
+    fs.mkdirs(spark, made)
+    fs.mkdirs(spark, made)  # present already: fine
+    assert (tmp_path / "a" / "b").is_dir()
+
+    class RefusingFs:
+        def mkdirs(self, path):
+            return False
+
+    monkeypatch.setattr(fs, "_hadoop", lambda spark, path: (RefusingFs(), None))
+    with pytest.raises(OSError, match="mkdirs failed"):
+        fs.mkdirs(spark, f"file://{tmp_path}/c")

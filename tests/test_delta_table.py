@@ -4,6 +4,7 @@ compaction, and spec-shape assertions on the emitted JSON actions."""
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
 
@@ -1796,6 +1797,97 @@ def test_write_delta_txn_floor_gating(spark, tmp_path):
     )
     assert v == 1
     assert read_delta(spark, path).count() == n0 + 1
+
+
+def test_write_delta_replays_the_log_once_until_a_race(
+    spark, tmp_path, monkeypatch
+):
+    """The state read before staging serves the commit while no newer
+    version lands: an uncontended append replays the log once, and a
+    populate into a Delta sink twice (its watermarks, then the write).
+    A lost race re-resolves against the winner's version."""
+    from changedatacapture_reporting_spark import fs as _fs
+    from changedatacapture_reporting_spark.operators.populate import (
+        populate_changelog,
+    )
+    from changedatacapture_reporting_spark.sources import delta_table
+
+    path = str(tmp_path / "t")
+    mk = lambda v: spark.createDataFrame([(v, "x")], "id long, v string")
+    write_delta(spark, mk(0), path)
+
+    replays = []
+    real_resolve = delta_table._resolve_log
+
+    def counting(sp, p, version):
+        replays.append(version)
+        return real_resolve(sp, p, version)
+
+    monkeypatch.setattr(delta_table, "_resolve_log", counting)
+    assert write_delta(spark, mk(1), path) == 1
+    assert len(replays) == 1
+
+    # a concurrent writer takes version 2 just as this one commits it
+    real_create = _fs.create_exclusive
+    injected = {"done": False}
+
+    def racing_create(sp, p, text=""):
+        if not injected["done"] and p.endswith("00000000000000000002.json"):
+            injected["done"] = True
+            n = len(replays)
+            write_delta(spark, mk(100), path)
+            del replays[n:]  # the winner's own replays
+        return real_create(sp, p, text)
+
+    monkeypatch.setattr(_fs, "create_exclusive", racing_create)
+    replays.clear()
+    assert write_delta(spark, mk(2), path) == 3
+    assert len(replays) == 2
+    assert sorted(r["id"] for r in read_delta(spark, path).collect()) == [
+        0, 1, 2, 100,
+    ]
+    monkeypatch.setattr(_fs, "create_exclusive", real_create)
+
+    sink = str(tmp_path / "sink")
+    events = spark.createDataFrame(
+        [
+            (n, 0, dt.datetime(2024, 1, n), "insert", "t", None, (n, "v"))
+            for n in (1, 2)
+        ],
+        "lsn long, seq long, commit_ts timestamp, op string,"
+        " table_name string, before struct<id:int,v:string>,"
+        " after struct<id:int,v:string>",
+    )
+    kw = dict(maintain_rollup=False, sink_format="delta")
+    populate_changelog(spark, events, sink, ["id"], to_lsn=1, **kw)
+    replays.clear()
+    res = populate_changelog(spark, events, sink, ["id"], **kw)
+    assert res.rows_changed == 1
+    assert len(replays) == 2
+
+
+def test_first_write_that_loses_the_creating_race_commits_next(
+    spark, tmp_path, monkeypatch
+):
+    """A write that found no table before staging, then lost version 0
+    to a concurrent creator, re-resolves and commits at version 1."""
+    from changedatacapture_reporting_spark import fs as _fs
+
+    path = str(tmp_path / "t")
+    mk = lambda v: spark.createDataFrame([(v, "x")], "id long, v string")
+    real_create = _fs.create_exclusive
+    injected = {"done": False}
+
+    def racing_create(sp, p, text=""):
+        if not injected["done"] and p.endswith("00000000000000000000.json"):
+            injected["done"] = True
+            write_delta(spark, mk(100), path)
+        return real_create(sp, p, text)
+
+    monkeypatch.setattr(_fs, "create_exclusive", racing_create)
+    assert write_delta(spark, mk(1), path) == 1
+    ids = sorted(r["id"] for r in read_delta(spark, path).collect())
+    assert ids == [1, 100]
 
 
 def _many_file_table(spark, path, n_files=40):

@@ -1042,6 +1042,27 @@ def test_topk_prebuilt_index_matches_trained(embeddings, tmp_path):
     )
 
 
+def test_pq_and_ivfpq_type_query_id_like_the_id_column(embeddings):
+    """On the same (small) ids, pq_topk and ivfpq_topk return the same
+    output schema, with query_id typed like the id column — not by the
+    magnitude of the id literals."""
+    from changedatacapture_reporting_spark.operators.similarity import (
+        ivfpq_topk,
+        pq_topk,
+    )
+
+    q = embeddings.filter(F.col("vec_id") < 5)
+    pq = pq_topk(embeddings, q, k=3, m=8, k_codes=16, iters=1)
+    ivfpq = ivfpq_topk(
+        embeddings, q, k=3, n_centroids=4, nprobe=2, m=8, k_codes=16, iters=1
+    )
+    id_type = embeddings.schema["vec_id"].dataType
+    assert pq.schema["query_id"].dataType == id_type
+    assert [(f.name, f.dataType) for f in pq.schema] == [
+        (f.name, f.dataType) for f in ivfpq.schema
+    ]
+
+
 def test_boilerplate_hashed_equals_string_key(documents):
     """The xxhash64-keyed production path selects identical per-doc
     scores to the raw-string oracle path, and the score actually

@@ -380,3 +380,30 @@ def test_delta_sink_concurrent_populate_gated(spark, tmp_path):
     assert (
         commit_batch_delta(spark, changelog, sink, ["id"]) > 0
     )
+
+
+def test_sidecar_commit_rows_plan_as_a_local_relation(spark):
+    """The parquet sink's commit point writes its watermark rows from a
+    JVM-local relation: no Python-RDD scan, so no Python-worker job per
+    commit."""
+    from pyspark.sql import Row
+
+    from changedatacapture_reporting_spark.operators.populate import (
+        _sidecar_rows,
+    )
+
+    per_table = [
+        Row(table_name="o'brien", lsn=5_000_000_000),
+        Row(table_name="t", lsn=7),
+    ]
+    df = _sidecar_rows(spark, per_table, "run-1")
+    plan = df.repartition(1)._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan
+    assert "LocalTableScan" in plan
+    assert df.dtypes == [
+        ("table_name", "string"), ("lsn", "bigint"), ("run_id", "string"),
+    ]
+    assert sorted(map(tuple, df.collect())) == [
+        ("o'brien", 5_000_000_000, "run-1"),
+        ("t", 7, "run-1"),
+    ]
