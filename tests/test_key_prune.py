@@ -54,7 +54,7 @@ def _schema(meta):
 
 
 def test_prune_keeps_only_overlapping_files(spark, tmp_path, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_KEY_PRUNE_MIN_FILES", "4")
+    monkeypatch.setattr(dt, "_KEY_PRUNE_MIN_FILES", 4)
     path = str(tmp_path / "t")
     _mk_ranged(spark, path)
     meta, adds = _state(spark, path)
@@ -74,7 +74,7 @@ def test_prune_keeps_only_overlapping_files(spark, tmp_path, monkeypatch):
 
 
 def test_prune_degenerate_keys(spark, tmp_path, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_KEY_PRUNE_MIN_FILES", "4")
+    monkeypatch.setattr(dt, "_KEY_PRUNE_MIN_FILES", 4)
     path = str(tmp_path / "t")
     _mk_ranged(spark, path, n_files=4)
     meta, adds = _state(spark, path)
@@ -93,7 +93,7 @@ def test_prune_degenerate_keys(spark, tmp_path, monkeypatch):
     )
     assert kept_e == [] and pruned_e == 4
     # below the file-count threshold: bypass — everything kept, no job
-    monkeypatch.setenv("SPARK_GRAFT_KEY_PRUNE_MIN_FILES", "64")
+    monkeypatch.setattr(dt, "_KEY_PRUNE_MIN_FILES", 64)
     kept_b, pruned_b = _prune_adds_by_key_bounds(
         spark, adds, keys_null, ["id"], meta, schema
     )
@@ -103,7 +103,7 @@ def test_prune_degenerate_keys(spark, tmp_path, monkeypatch):
 def test_prune_unsafe_type_bypasses(spark, tmp_path, monkeypatch):
     """float/double pk columns contribute no conjunct (NaN ordering) —
     a single-column float pk bypasses the prune entirely."""
-    monkeypatch.setenv("SPARK_GRAFT_KEY_PRUNE_MIN_FILES", "1")
+    monkeypatch.setattr(dt, "_KEY_PRUNE_MIN_FILES", 1)
     path = str(tmp_path / "t")
     write_delta(
         spark,
@@ -132,10 +132,10 @@ def test_delete_with_prune_equals_without(spark, tmp_path, monkeypatch):
     probe: dict = {}
     dt._PLAN_PROBE = probe
     try:
-        monkeypatch.setenv("SPARK_GRAFT_KEY_PRUNE_MIN_FILES", "4")
+        monkeypatch.setattr(dt, "_KEY_PRUNE_MIN_FILES", 4)
         ra = delete_delta(spark, a, keys, deletion_vectors=True)
         pruned_a = dict(probe["delete_key_prune"])
-        monkeypatch.setenv("SPARK_GRAFT_KEY_PRUNE_MIN_FILES", "999")
+        monkeypatch.setattr(dt, "_KEY_PRUNE_MIN_FILES", 999)
         rb = delete_delta(spark, b, keys, deletion_vectors=True)
     finally:
         dt._PLAN_PROBE = None
@@ -148,7 +148,7 @@ def test_delete_with_prune_equals_without(spark, tmp_path, monkeypatch):
 def test_delete_prune_whole_table_miss(spark, tmp_path, monkeypatch):
     """Keys entirely outside every file's range: nothing scanned,
     nothing deleted, no commit."""
-    monkeypatch.setenv("SPARK_GRAFT_KEY_PRUNE_MIN_FILES", "4")
+    monkeypatch.setattr(dt, "_KEY_PRUNE_MIN_FILES", 4)
     path = str(tmp_path / "t")
     _mk_ranged(spark, path)
     before = _rows(read_delta(spark, path))
@@ -174,10 +174,10 @@ def test_merge_with_prune_equals_without(spark, tmp_path, monkeypatch):
     probe: dict = {}
     dt._PLAN_PROBE = probe
     try:
-        monkeypatch.setenv("SPARK_GRAFT_KEY_PRUNE_MIN_FILES", "4")
+        monkeypatch.setattr(dt, "_KEY_PRUNE_MIN_FILES", 4)
         ra = merge_delta(spark, mrg, a, ["id"], delete_col="_del")
         pruned_a = dict(probe["merge_key_prune"])
-        monkeypatch.setenv("SPARK_GRAFT_KEY_PRUNE_MIN_FILES", "999")
+        monkeypatch.setattr(dt, "_KEY_PRUNE_MIN_FILES", 999)
         rb = merge_delta(spark, mrg, b, ["id"], delete_col="_del")
     finally:
         dt._PLAN_PROBE = None
@@ -198,11 +198,11 @@ def test_merge_dv_with_prune_equals_without(spark, tmp_path, monkeypatch):
          (17, 0, "g2", True)],
         "id int, v int, p string, _del boolean",
     )
-    monkeypatch.setenv("SPARK_GRAFT_KEY_PRUNE_MIN_FILES", "4")
+    monkeypatch.setattr(dt, "_KEY_PRUNE_MIN_FILES", 4)
     ra = merge_delta(
         spark, mrg, a, ["id"], delete_col="_del", deletion_vectors=True
     )
-    monkeypatch.setenv("SPARK_GRAFT_KEY_PRUNE_MIN_FILES", "999")
+    monkeypatch.setattr(dt, "_KEY_PRUNE_MIN_FILES", 999)
     rb = merge_delta(
         spark, mrg, b, ["id"], delete_col="_del", deletion_vectors=True
     )
@@ -214,7 +214,7 @@ def test_merge_dv_with_prune_equals_without(spark, tmp_path, monkeypatch):
 def test_prune_respects_partition_values(spark, tmp_path, monkeypatch):
     """A pk that is a PARTITION column prunes from partitionValues
     (stats carry no entry for partition columns)."""
-    monkeypatch.setenv("SPARK_GRAFT_KEY_PRUNE_MIN_FILES", "2")
+    monkeypatch.setattr(dt, "_KEY_PRUNE_MIN_FILES", 2)
     path = str(tmp_path / "t")
     rows = [(i, i * 10, i % 4) for i in range(40)]
     write_delta(

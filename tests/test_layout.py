@@ -243,28 +243,10 @@ def test_optimize_delta_zorder_tolerates_all_null_files(spark, tmp_path):
     assert rows == {(1, 10.0), (2, 20.0), (3, None), (4, None), (5, None)}
 
 
-def test_optimize_delta_zorder_sampled_beats_linear_on_skew(spark, tmp_path):
-    """The r13 skew-tight upgrade: on a power-law z column (one hot
-    region holding ~99% of rows), linear stats-bounds bucketing maps
-    almost every row to bucket 0 — post-ZORDER files all overlap and a
-    hot-region predicate prunes (almost) nothing. Sampled quantile cuts
-    keep per-bucket counts balanced, so the same predicate prunes most
-    files. Both modes must stay row-identical to the input."""
-    import json as _json
-
-    from pyspark.sql import types as T
-
-    from changedatacapture_reporting_spark.sources.delta_table import (
-        _resolve_log,
-        optimize_delta,
-        prune_adds,
-        read_delta,
-        write_delta,
-    )
-
-    # skewed: 99% of keys in [0, 100), a thin tail out to 10^9
-    n = 20_000
-    df = spark.range(n).select(
+def _skewed(spark, n):
+    """``id``, a power-law ``k`` (99% of rows in [0, 100), a thin tail
+    out to 10^9) and a small cyclic ``t``."""
+    return spark.range(n).select(
         F.col("id"),
         F.when(F.col("id") % 100 < 99, F.col("id") % 100)
         .otherwise((F.col("id") % 1000) * 1_000_000)
@@ -273,31 +255,87 @@ def test_optimize_delta_zorder_sampled_beats_linear_on_skew(spark, tmp_path):
         (F.col("id") % 7).cast("long").alias("t"),
     )
 
-    def kept_after(path, sampling):
-        write_delta(spark, df.repartition(4), path)
-        res = optimize_delta(
-            spark, path, target_file_bytes=16 << 10,
-            zorder_by=("k", "t"), zorder_sampling=sampling,
-        )
-        assert res["version"] is not None
-        state = _resolve_log(spark, path, None)
-        adds = list(state["files"].values())
-        schema = T.StructType.fromJson(
-            _json.loads(state["meta"]["schemaString"])
-        )
-        skip = [("k", "<", 5)]  # narrow probe inside the hot region
-        got = read_delta(spark, path, skip=skip).count()
-        want = read_delta(spark, path).filter(F.col("k") < 5).count()
-        assert got == want  # skipping is still exactly the filter
-        assert read_delta(spark, path).count() == n
-        return len(prune_adds(adds, skip, [], schema)), len(adds)
 
-    lin_kept, lin_total = kept_after(str(tmp_path / "lin"), False)
-    smp_kept, smp_total = kept_after(str(tmp_path / "smp"), True)
-    assert smp_total >= 4 and lin_total >= 4
-    # linear collapses: the hot region spans (nearly) every file;
-    # sampled keeps the probe inside a strict minority of files
-    assert smp_kept / smp_total < 0.5, (smp_kept, smp_total)
-    assert smp_kept / smp_total < lin_kept / lin_total, (
-        (smp_kept, smp_total), (lin_kept, lin_total),
+def _k_lt_5_probe(spark, path):
+    """(files a ``k < 5`` probe keeps, live files, rows in the kept
+    files) of a Delta table, after checking the skipped read equals the
+    filtered one."""
+    import json as _json
+
+    from pyspark.sql import types as T
+
+    from changedatacapture_reporting_spark.sources.delta_table import (
+        _resolve_log,
+        prune_adds,
+        read_delta,
     )
+
+    state = _resolve_log(spark, path, None)
+    adds = list(state["files"].values())
+    schema = T.StructType.fromJson(_json.loads(state["meta"]["schemaString"]))
+    skip = [("k", "<", 5)]  # narrow probe inside the hot region
+    got = read_delta(spark, path, skip=skip).count()
+    want = read_delta(spark, path).filter(F.col("k") < 5).count()
+    assert got == want  # skipping is still exactly the filter
+    kept = prune_adds(adds, skip, [], schema)
+    rows = sum(_json.loads(a["stats"])["numRecords"] for a in kept)
+    return len(kept), len(adds), rows
+
+
+def test_optimize_delta_zorder_sampled_beats_linear_on_skew(spark, tmp_path):
+    """The r13 skew-tight bucketing: on a power-law z column (one hot
+    region holding ~99% of rows), a linear min/max curve maps almost
+    every row to bucket 0, so post-ZORDER files all overlap and a
+    hot-region predicate prunes (almost) nothing. Sampled quantile cuts
+    keep per-bucket counts balanced, so the same predicate prunes most
+    files, and the rows stay identical to the input."""
+    from changedatacapture_reporting_spark.sources.delta_table import (
+        optimize_delta,
+        read_delta,
+        write_delta,
+    )
+
+    n = 20_000
+    path = str(tmp_path / "smp")
+    write_delta(spark, _skewed(spark, n).repartition(4), path)
+    res = optimize_delta(
+        spark, path, target_file_bytes=16 << 10, zorder_by=("k", "t"),
+    )
+    assert res["version"] is not None
+    smp_kept, smp_total, _ = _k_lt_5_probe(spark, path)
+    assert read_delta(spark, path).count() == n
+    assert smp_total >= 4
+    # the probe stays inside a strict minority of files
+    assert smp_kept / smp_total < 0.5, (smp_kept, smp_total)
+
+
+def test_optimize_delta_zorder_all_null_column_keeps_other_cuts(
+    spark, tmp_path
+):
+    """A single-group ZORDER whose second z column is all-NULL: that
+    column's rows all land in bucket 0, and the skewed first column
+    keeps its own quantile cuts, so the hot-region probe prunes most
+    files AND most rows. A linear min/max fallback on both columns
+    collapses the hot region into one bucket: it lands in a single file
+    holding ~99% of the rows, which the probe must then read."""
+    from changedatacapture_reporting_spark.sources.delta_table import (
+        optimize_delta,
+        read_delta,
+        write_delta,
+    )
+
+    n = 20_000
+    path = str(tmp_path / "zn1")
+    df = _skewed(spark, n).withColumn("t", F.lit(None).cast("long"))
+    write_delta(spark, df.repartition(4), path)
+    before = sorted(tuple(r) for r in read_delta(spark, path).collect())
+    res = optimize_delta(
+        spark, path, target_file_bytes=16 << 10, zorder_by=("k", "t"),
+    )
+    assert res["version"] is not None
+    after = sorted(tuple(r) for r in read_delta(spark, path).collect())
+    assert after == before
+    kept, total, kept_rows = _k_lt_5_probe(spark, path)
+    assert total >= 4
+    assert kept / total < 0.5, (kept, total)
+    assert kept_rows < n / 2, (kept_rows, n)

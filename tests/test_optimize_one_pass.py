@@ -169,6 +169,7 @@ def test_one_pass_slot_map_is_broadcast_join(spark, tmp_path):
     plan = probe["compact_one_pass"]
     assert "BroadcastHashJoin" in plan, plan
     assert "create_map" not in plan, plan
+    assert "ExistingRDD" not in plan, plan  # slot map is a local relation
     assert read_delta(spark, path).count() == 1200
 
 
@@ -200,6 +201,8 @@ def test_zorder_one_pass_multi_group(spark, tmp_path):
     assert res["version"] is not None and res["files_added"] >= 4
     assert "zorder_one_pass" in probe
     assert "BroadcastHashJoin" in probe["zorder_one_pass"]
+    # per-group tables are local relations, not Python RDDs
+    assert "ExistingRDD" not in probe["zorder_one_pass"]
     after = {
         (r["id"], r["p"], r["k"], r["t"])
         for r in read_delta(spark, path).collect()
@@ -216,29 +219,6 @@ def test_zorder_one_pass_multi_group(spark, tmp_path):
     assert kept < len(adds), (kept, len(adds))
     got = read_delta(spark, path, skip=skip).count()
     want = read_delta(spark, path).filter(F.col("k") < 50).count()
-    assert got == want
-
-
-def test_zorder_one_pass_linear_mode(spark, tmp_path):
-    """zorder_sampling=False multi-group: stats-bounds linear buckets
-    ride the same broadcast one-pass; rows identical."""
-    path = str(tmp_path / "zlin")
-    df = spark.range(0, 4000).select(
-        F.col("id"),
-        (F.col("id") % 2).cast("int").alias("p"),
-        (F.col("id") % 500).cast("long").alias("k"),
-        (F.col("id") % 5).cast("long").alias("t"),
-    )
-    write_delta(spark, df.repartition(4), path, partition_by=["p"])
-    before = read_delta(spark, path).count()
-    res = optimize_delta(
-        spark, path, target_file_bytes=16 << 10,
-        zorder_by=("k", "t"), zorder_sampling=False,
-    )
-    assert res["version"] is not None
-    assert read_delta(spark, path).count() == before
-    got = read_delta(spark, path, skip=[("k", "<", 20)]).count()
-    want = read_delta(spark, path).filter(F.col("k") < 20).count()
     assert got == want
 
 

@@ -65,9 +65,8 @@ def one_delete(spark, path: str, keys, prune: bool) -> dict:
         delete_delta,
     )
 
-    os.environ["SPARK_GRAFT_KEY_PRUNE_MIN_FILES"] = (
-        "8" if prune else "100000000"
-    )
+    min_files = dt._KEY_PRUNE_MIN_FILES
+    dt._KEY_PRUNE_MIN_FILES = 8 if prune else 100000000
     probe: dict = {}
     dt._PLAN_PROBE = probe
     try:
@@ -76,7 +75,7 @@ def one_delete(spark, path: str, keys, prune: bool) -> dict:
         wall = time.perf_counter() - t0
     finally:
         dt._PLAN_PROBE = None
-        del os.environ["SPARK_GRAFT_KEY_PRUNE_MIN_FILES"]
+        dt._KEY_PRUNE_MIN_FILES = min_files
     return {
         "wall": wall,
         "rows_deleted": res["rows_deleted"],
