@@ -565,7 +565,7 @@ HEADLINE = [
     "profile_lineitem_correlations",
     "cdc_drift_report",
     # streaming_incremental_agg stays out: like cdc_forget_keys it
-    # populates a tempdir target per run (epoch-ledger commit churn);
+    # populates a tempdir target per run (a fresh Delta table per run);
     # its batch-side plan is cdc_incremental_agg, benched above.
     # r9 additions: steady-state index-serving numbers (bench-only
     # overrides — index built+persisted on rep 1, min-of-reps reports

@@ -29,6 +29,9 @@ from changedatacapture_reporting_spark.streaming.windows import (
 )
 
 _counter = itertools.count()
+# floor and cap of the scaled streaming state-store partition count
+_STATE_PARTITIONS_MIN = 4
+_STATE_PARTITIONS_MAX = 1024
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -62,8 +65,7 @@ def _scaled_state_partitions(sf_dir: str) -> int:
     the work (a 2 MB fixture drains through 4 stores, not 32; a
     100 TB/day stream saturates the 1024 cap and parallelism comes
     from there). Floor 4 preserves multi-partition semantics
-    (cross-partition watermark/commit coordination stays exercised);
-    override cap/floor via SPARK_GRAFT_STREAM_STATE_MAX/MIN."""
+    (cross-partition watermark/commit coordination stays exercised)."""
     import math
 
     total = 0
@@ -76,9 +78,10 @@ def _scaled_state_partitions(sf_dir: str) -> int:
             )
     except OSError:
         pass
-    lo = int(os.environ.get("SPARK_GRAFT_STREAM_STATE_MIN", "4"))
-    hi = int(os.environ.get("SPARK_GRAFT_STREAM_STATE_MAX", "1024"))
-    return max(lo, min(hi, math.ceil(total / (32 << 20))))
+    return max(
+        _STATE_PARTITIONS_MIN,
+        min(_STATE_PARTITIONS_MAX, math.ceil(total / (32 << 20))),
+    )
 
 
 def _drain_to_table(
@@ -351,13 +354,13 @@ def _dedup_keys_pre_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_apply_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming materialized current-state table
     (streaming.apply_stream.stream_apply): the multi-event stream drains
-    through per-batch net-changes + MERGE into a versioned snapshot with
-    marker-file commits. The oracle computes the end state from the
-    event arithmetic (net delete keys vanish — including insert→delete
-    inside the window; second-update keys carry status 'Y' / total+7).
-    Multi-batch sequencing, replay idempotence, and crash semantics are
-    pytest-covered (test_streaming.py::test_stream_apply_maintains_
-    current_state)."""
+    through per-batch net-changes + a Delta MERGE by pk, each commit
+    carrying the txn action (app id, batch id). The oracle computes the
+    end state from the event arithmetic (net delete keys vanish —
+    including insert→delete inside the window; second-update keys carry
+    status 'Y' / total+7). Multi-batch sequencing, replay idempotence,
+    and crash semantics are pytest-covered
+    (test_streaming.py::test_stream_apply_maintains_current_state)."""
     import tempfile
 
     from changedatacapture_reporting_spark.sources.cdc_simulator import (
@@ -406,8 +409,9 @@ def streaming_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     into signed deltas and merges; state is never rescanned. The oracle
     is the from-scratch GROUP BY of the post-stream state (the batch
     cdc_incremental_agg contract's oracle, reached here through the live
-    streaming engine + epoch-ledger commits). Multi-batch sequencing,
-    group death, and replay idempotence are pytest-covered
+    streaming engine + Delta overwrite commits carrying the txn action).
+    Multi-batch sequencing, group death, and replay idempotence are
+    pytest-covered
     (test_streaming.py::test_stream_maintain_aggregate_equals_direct)."""
     import tempfile
 
@@ -465,10 +469,11 @@ def streaming_pointintime_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming temporal enrichment (streaming.enrich_stream.
     stream_temporal_enrich): the orders facts drain as a stream and each
     micro-batch joins the SCD2 customer dimension AT THE FACT'S OWN
-    timestamp (batch temporal_enrich inside foreachBatch, epoch-ledger
-    exactly-once) — late facts enrich correctly by construction. The
-    oracle is the batch contract's interval LEFT JOIN (the epoch layers
-    must not change results). Replay idempotence is pytest-covered."""
+    timestamp (batch temporal_enrich inside foreachBatch, Delta appends
+    whose txn action makes them exactly-once) — late facts enrich
+    correctly by construction. The oracle is the batch contract's
+    interval LEFT JOIN (the per-batch commits must not change results).
+    Replay idempotence is pytest-covered."""
     import tempfile
 
     from changedatacapture_reporting_spark.sources.tables import load_table

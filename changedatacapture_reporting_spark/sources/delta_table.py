@@ -5020,7 +5020,7 @@ def merge_delta(
 
     The 100 TB shape: rewrite I/O ∝ files CONTAINING matched keys, not
     table size. A column-pruned (pk + provenance) scan of the live set
-    discovers which files hold matches via one broadcast semi-join;
+    discovers which files hold matches via one broadcast join;
     only those files are re-read in full — survivors (anti-join on pk)
     are rewritten together with the upserts, every untouched file stays
     live in place, and the swap commits remove+add (dataChange: true)
@@ -5055,7 +5055,8 @@ def merge_delta(
 
     Returns {"version", "files_rewritten", "files_added", "rows_upserted",
     "rows_deleted"} (+ {"files_dv_updated", "files_removed",
-    "deletion_vector"} in vector mode).
+    "deletion_vector"} in vector mode); ``rows_deleted`` counts the
+    target rows removed, so a delete key absent from the table adds 0.
     """
     state = _resolve_log(spark, path, None)
     _check_write_protocol(state, path)  # refuse before any merge work
@@ -5118,7 +5119,18 @@ def merge_delta(
         )
 
     all_keys = source.select(*pk_cols)
-    n_deleted = deletes.count() if deletes is not None else 0
+    # source keys flagged by delete_col: the discovery join below
+    # carries the flag onto the TARGET rows it matches, so
+    # rows_deleted counts rows actually removed, not delete requests
+    # (source pks are unique, so the inner join never fans out)
+    keyed = source.select(
+        *pk_cols,
+        (
+            F.coalesce(F.col(delete_col), F.lit(False))
+            if delete_col is not None
+            else F.lit(False)
+        ).alias("_is_delete"),
+    )
     n_upserts = data_source.count()
 
     adds = list(state["files"].values())
@@ -5126,7 +5138,7 @@ def merge_delta(
     # [min,max] pk range can overlap the source keys (guide §3.2/§6);
     # untouched-by-construction files never even reach the plan. Sound
     # for every downstream leg: touched files, survivors and the CDC
-    # record all derive from the discovery semi-join, which a range-
+    # record all derive from the discovery join, which a range-
     # disjoint file can never satisfy, and inserts come from the source
     # side alone.
     adds, n_stats_pruned = _prune_adds_by_key_bounds(
@@ -5254,10 +5266,11 @@ def merge_delta(
         matched = (
             _scan_adds(spark, path, meta, adds, with_rowpos=True)
             .select(*pk_cols, "_pos_key", "_pos_idx")
-            .join(F.broadcast(all_keys), pk_cols, "left_semi")
+            .join(F.broadcast(keyed), pk_cols)
             .select(
                 F.col("_pos_key").alias("path"),
                 F.col("_pos_idx").alias("row_index"),
+                "_is_delete",
             )
             .persist()
         )
@@ -5290,7 +5303,9 @@ def merge_delta(
             actions: list[dict] = []
             dv_rel = None
             dead = 0
+            n_deleted = 0
             if touched_adds:
+                n_deleted = matched.filter("_is_delete").count()
                 # protocol bump rides ONLY with an actually-staged
                 # vector (ADVICE r13): an insert-only merge must not
                 # upgrade the table to (3,7)+deletionVectors — that
@@ -5346,23 +5361,24 @@ def merge_delta(
         }
 
     # rewrite mode — discovery: column-pruned pk + row-position scan,
-    # broadcast semi-join. ``_pos_key`` is the canonical file key (the
+    # broadcast join. ``_pos_key`` is the canonical file key (the
     # decoded path suffix — immune to the URI-vs-filesystem encoding
     # trap hive-escaped partition dirs set for raw input_file_name
     # matching), so touched adds resolve by exact set lookup instead of
     # an O(touched × adds) suffix scan; the scan also applies any live
     # deletion vectors, so rows a vector already deleted can't re-mark
     # their files as touched.
-    touched_keys = {
-        r["path"]
+    deleted_per_file = {
+        r["path"]: r["n_deleted"]
         for r in _scan_adds(spark, path, meta, adds, with_rowpos=True)
         .select(*pk_cols, "_pos_key")
-        .join(F.broadcast(all_keys), pk_cols, "left_semi")
-        .select(F.col("_pos_key").alias("path"))
-        .distinct()
+        .join(F.broadcast(keyed), pk_cols)
+        .groupBy(F.col("_pos_key").alias("path"))
+        .agg(F.count_if("_is_delete").alias("n_deleted"))
         .collect()
     }
-    touched_adds = [a for a in adds if _canon_key(a) in touched_keys]
+    n_deleted = sum(deleted_per_file.values())
+    touched_adds = [a for a in adds if _canon_key(a) in deleted_per_file]
 
     if not touched_adds and n_upserts == 0:
         return {

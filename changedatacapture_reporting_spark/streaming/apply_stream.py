@@ -1,57 +1,58 @@
-"""Streaming materialized current-state table: per micro-batch, collapse
-the batch to NET changes and MERGE them into a served snapshot — the
+"""Streaming apply of a CDC event stream onto Delta tables — the
 streaming form of the consumer-side pipeline
-(operators.net_changes → operators.apply), kept exactly-once the same way
-stream_populate is: deterministic epoch ids with a marker-file commit
-point, so a replayed epoch is detected in the target's own ledger and
-skipped (sink-side idempotency, not checkpoint trust).
+(operators.net_changes → operators.apply) and its grouped twin:
 
-Versioned-snapshot layout (the MERGE must read the table it replaces, so
-updates go to a fresh version directory and a marker flips visibility):
+- :func:`stream_apply` keeps a current-state table. Each micro-batch
+  collapses to NET changes and MERGEs into the target by pk
+  (``sources.delta_table.delta_stream_merger``): net deletes remove the
+  key, every other net row upserts its ``after`` image. The MERGE is
+  file-targeted, so a batch rewrites only the files holding its keys.
+- :func:`stream_maintain_aggregate` keeps a grouped aggregate exact.
+  Each micro-batch folds into signed per-group deltas, merged into the
+  groups-sized table and committed as one atomic overwrite.
 
-    target/
-      v=<epoch>/…parquet       one directory per committed epoch
-      _epochs/epoch-…          marker per committed epoch (COMMIT POINT —
-                               written AFTER the version directory lands;
-                               max marker = current version)
-
-A crash after data, before marker: the version dir is invisible and the
-epoch replays into it (overwrite). A crash after marker: the replayed
-epoch is detected and skipped. Readers resolve the max marker — always a
-complete version.
-
-Scale posture: each batch's work is net_changes (one aggregation over
-the BATCH) + apply_changes (broadcast anti-join of batch keys against
-the current version — the target never shuffles) + a full-version
-rewrite. The rewrite is the cost of plain-parquet storage; swap the
-writer for operators.serving's bucket-level refresh when the state is
-large relative to batches.
+Exactly-once: every commit carries the Delta PROTOCOL's transaction
+action ``txn=(app id, batch id)``. A micro-batch the engine replays
+(a crash between the Delta commit and the checkpoint commit) finds its
+batch id at or below the app's recorded watermark and is skipped
+inside the commit — sink-side idempotency, not checkpoint trust. A
+crash before the commit leaves only unreferenced files: readers never
+open them and ``vacuum_delta`` reclaims them. Readers resolve the
+latest committed version, which is always complete.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from changedatacapture_reporting_spark.fs import (
-    exists as fs_exists,
-    join as fs_join,
-    listdir,
-    write_text,
-)
-from changedatacapture_reporting_spark.operators.apply import apply_changes
 from changedatacapture_reporting_spark.operators.net_changes import net_changes
-from changedatacapture_reporting_spark.streaming.populate_stream import (
-    epoch_run_id,
+from changedatacapture_reporting_spark.sources.delta_table import (
+    delta_stream_merger,
+    read_delta,
+    table_versions,
+    write_delta,
 )
 
+_APPLY_APP = "stream_apply"
+_AGG_APP = "stream_maintain_aggregate"
+_DELETE = "_net_delete"  # merge source's delete flag (net_op = delete)
 
-def _committed_epochs(spark: SparkSession, target_path: str) -> list[str]:
-    marker_dir = os.path.join(target_path, "_epochs")
-    return [n for n in listdir(spark, marker_dir) if n.startswith("epoch-")]
+
+def _state_struct(
+    source_struct: T.StructType, pk_cols: list[str], value_cols: list[str]
+) -> T.StructType:
+    """Schema of the current-state table: the pk and value fields of
+    the source row, nullable (net images are read back nullable)."""
+    return T.StructType(
+        [
+            T.StructField(f.name, f.dataType)
+            for f in source_struct.fields
+            if f.name in (*pk_cols, *value_cols)
+        ]
+    )
 
 
 def read_current_state(
@@ -61,16 +62,13 @@ def read_current_state(
     value_cols: list[str],
     source_struct: T.StructType,
 ) -> DataFrame:
-    """The served table: the max committed version, or an empty typed
-    frame before the first commit."""
-    epochs = _committed_epochs(spark, target_path)
-    if not epochs:
-        fields = [
-            f for f in source_struct.fields if f.name in (*pk_cols, *value_cols)
-        ]
-        return spark.createDataFrame([], T.StructType(fields))
-    current = epochs[-1]
-    return spark.read.parquet(os.path.join(target_path, f"v={current}"))
+    """The served table: the latest Delta version, or an empty typed
+    frame before the target exists."""
+    if not table_versions(spark, target_path):
+        return spark.createDataFrame(
+            [], _state_struct(source_struct, pk_cols, value_cols)
+        )
+    return read_delta(spark, target_path)
 
 
 def stream_apply(
@@ -84,26 +82,27 @@ def stream_apply(
     available_now: bool = True,
 ) -> StreamingQuery:
     """Maintain the current-state table from a CDC event stream."""
-    source_struct = event_schema["after"].dataType
+    state = _state_struct(event_schema["after"].dataType, pk_cols, value_cols)
+    if not table_versions(spark, target_path):
+        write_delta(spark, spark.createDataFrame([], state), target_path)
+    merge = delta_stream_merger(
+        target_path, pk_cols, _APPLY_APP, delete_col=_DELETE
+    )
     stream = spark.readStream.schema(event_schema).parquet(events_path)
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        session = batch_df.sparkSession
-        run_id = epoch_run_id(epoch_id)
-        if run_id in _committed_epochs(session, target_path):
-            return  # replayed epoch — already visible
-
-        current = read_current_state(
-            session, target_path, pk_cols, value_cols, source_struct
-        )
         net = net_changes(batch_df, pk_cols)
-        applied = apply_changes(
-            current, net, pk_cols, value_cols, broadcast_net=True
+        # the net image cast to the target's types, as apply_changes does
+        source = net.select(
+            *[
+                F.col(f.name if f.name in pk_cols else f"after.{f.name}")
+                .cast(f.dataType)
+                .alias(f.name)
+                for f in state.fields
+            ],
+            (F.col("net_op") == "delete").alias(_DELETE),
         )
-        version_dir = os.path.join(target_path, f"v={run_id}")
-        applied.write.mode("overwrite").parquet(version_dir)
-        # COMMIT POINT — single marker file after the version lands
-        write_text(session, os.path.join(target_path, "_epochs", run_id))
+        merge(source, epoch_id)
 
     writer = stream.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint_path
@@ -111,120 +110,6 @@ def stream_apply(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def vacuum_versions(
-    spark: SparkSession, target_path: str, keep: int = 2
-) -> int:
-    """Drop all but the newest ``keep`` committed versions (markers stay
-    — they are the replay ledger and cost one empty file each). Readers
-    resolve the max marker, so removing older version DIRECTORIES is
-    safe at any time; ``keep >= 2`` leaves the previous version for
-    readers that resolved it just before a commit. Returns the number of
-    versions removed."""
-    from changedatacapture_reporting_spark.fs import delete
-
-    if keep < 1:
-        raise ValueError("keep must be >= 1")
-    epochs = sorted(_committed_epochs(spark, target_path))
-    doomed = epochs[:-keep] if keep < len(epochs) else []
-    removed = 0
-    for e in doomed:
-        if delete(spark, os.path.join(target_path, f"v={e}")):
-            removed += 1
-    return removed
-
-
-def stream_apply_bucketed(
-    spark: SparkSession,
-    events_path: str,
-    event_schema: T.StructType,
-    snapshot_path: str,
-    checkpoint_path: str,
-    pk_cols: list[str],
-    value_cols: list[str],
-    n_buckets: int = 64,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Large-state variant of :func:`stream_apply`: instead of rewriting
-    a full current-state version per micro-batch, fold each batch into a
-    bucket-partitioned serving snapshot via
-    ``operators.serving.refresh_state_snapshot`` — per-batch I/O is
-    proportional to (batch + touched buckets), never state size. This is
-    the composition the module docstring's scale note promises for
-    targets where the state is large relative to the batches.
-
-    Exactly-once WITHOUT an epoch ledger: the snapshot's own LSN
-    watermark is the commit point. A replayed micro-batch's rows are all
-    ``<=`` the committed watermark, so the refresh's ``lsn >`` filter
-    reduces the replay to a no-op; a crash at any point inside a refresh
-    is healed by its marker-manifest replace commit (``recover_sink``
-    runs at the start of every refresh). Bootstrap is idempotent too:
-    ``build_state_snapshot`` writes data then meta, and a crash between
-    them replays into a full overwrite.
-
-    The served values are the changelog's string-typed images (the
-    serving-snapshot convention), vs ``stream_apply``'s native-typed
-    ``after`` columns; tests/test_apply_stream.py proves the two agree
-    under that cast on every prefix of the stream.
-    """
-    from changedatacapture_reporting_spark.operators.changelog import (
-        build_changelog,
-    )
-    from changedatacapture_reporting_spark.operators.serving import (
-        META_FILE,
-        build_state_snapshot,
-        refresh_state_snapshot,
-    )
-
-    stream = spark.readStream.schema(event_schema).parquet(events_path)
-
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        session = batch_df.sparkSession
-        log = build_changelog(
-            batch_df,
-            pk_cols,
-            with_audit_cols=False,
-            carry_cols=["lsn", "seq"],
-            record_insert_images=True,
-        )
-        if fs_exists(session, fs_join(snapshot_path, META_FILE)):
-            refresh_state_snapshot(
-                session, log, snapshot_path, pk_cols, value_cols
-            )
-        else:
-            build_state_snapshot(
-                session, log, snapshot_path, pk_cols, value_cols, n_buckets
-            )
-
-    writer = stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def read_state_bucketed(
-    spark: SparkSession,
-    snapshot_path: str,
-    pk_cols: list[str],
-    value_cols: list[str],
-) -> DataFrame:
-    """The served table of a :func:`stream_apply_bucketed` target (pk +
-    string-typed value cols), or an empty typed frame before bootstrap."""
-    from changedatacapture_reporting_spark.operators.serving import (
-        META_FILE,
-        read_state_snapshot,
-    )
-
-    if not fs_exists(spark, fs_join(snapshot_path, META_FILE)):
-        fields = [T.StructField(c, T.StringType()) for c in pk_cols]
-        fields += [T.StructField(c, T.StringType()) for c in value_cols]
-        return spark.createDataFrame([], T.StructType(fields))
-    return read_state_snapshot(spark, snapshot_path).select(
-        *pk_cols, *value_cols
-    )
 
 
 def read_aggregate(
@@ -235,34 +120,32 @@ def read_aggregate(
     source_struct: T.StructType,
 ) -> DataFrame:
     """The maintained aggregate table of a
-    :func:`stream_maintain_aggregate` target: the max committed version,
+    :func:`stream_maintain_aggregate` target: the latest Delta version,
     or an empty typed frame before bootstrap. Empty-frame measures carry
     the SUM-RESULT type of their source field (long for integrals,
     decimal(p+10, s) for decimals — Spark's sum widening, the same type
     ``bootstrap_aggregate``'s GROUP BY would produce), so a no-bootstrap
     start maintains decimals exactly instead of locking the view to long
-    and truncating the first epoch's deltas."""
-    epochs = _committed_epochs(spark, target_path)
-    if not epochs:
+    and truncating the first batch's deltas."""
+    if table_versions(spark, target_path):
+        return read_delta(spark, target_path)
 
-        def sum_result_type(dt: T.DataType) -> T.DataType:
-            if isinstance(dt, T.DecimalType):
-                return T.DecimalType(min(38, dt.precision + 10), dt.scale)
-            return T.LongType()
+    def sum_result_type(dt: T.DataType) -> T.DataType:
+        if isinstance(dt, T.DecimalType):
+            return T.DecimalType(min(38, dt.precision + 10), dt.scale)
+        return T.LongType()
 
-        fields = [
-            T.StructField(f.name, f.dataType)
-            for f in source_struct.fields
-            if f.name in group_cols
-        ]
-        fields.append(T.StructField("n_rows", T.LongType()))
-        fields += [
-            T.StructField(a, sum_result_type(source_struct[src].dataType))
-            for a, src in sum_cols.items()
-        ]
-        return spark.createDataFrame([], T.StructType(fields))
-    current = sorted(epochs)[-1]
-    return spark.read.parquet(os.path.join(target_path, f"v={current}"))
+    fields = [
+        T.StructField(f.name, f.dataType)
+        for f in source_struct.fields
+        if f.name in group_cols
+    ]
+    fields.append(T.StructField("n_rows", T.LongType()))
+    fields += [
+        T.StructField(a, sum_result_type(source_struct[src].dataType))
+        for a, src in sum_cols.items()
+    ]
+    return spark.createDataFrame([], T.StructType(fields))
 
 
 def bootstrap_aggregate(
@@ -270,16 +153,20 @@ def bootstrap_aggregate(
 ) -> None:
     """Seed the maintained aggregate from a base snapshot's GROUP BY
     (the deployment bootstrap: aggregate the initial state once, then
-    never rescan it). Committed through the same version+marker
-    protocol, as epoch ``bootstrap`` — idempotent: a second call with a
-    bootstrap already committed is a no-op."""
-    run_id = "epoch-0-bootstrap"
-    if run_id in _committed_epochs(spark, target_path):
+    never rescan it) as the target's first Delta version. Idempotent: a
+    second call on a target that already has a version is a no-op."""
+    if table_versions(spark, target_path):
         return
-    initial.write.mode("overwrite").parquet(
-        os.path.join(target_path, f"v={run_id}")
+    # commit every column nullable: the maintained rewrites are read
+    # back nullable, and a write may not loosen the committed schema
+    nullable = T.StructType(
+        [T.StructField(f.name, f.dataType) for f in initial.schema]
     )
-    write_text(spark, os.path.join(target_path, "_epochs", run_id))
+    write_delta(
+        spark,
+        spark.createDataFrame([], nullable).unionByName(initial),
+        target_path,
+    )
 
 
 def stream_maintain_aggregate(
@@ -297,15 +184,13 @@ def stream_maintain_aggregate(
     before/after images into signed per-group deltas
     (operators.incremental_agg.aggregate_deltas) and merge them into the
     maintained table (merge_aggregate: untouched groups anti-join
-    through, zero-count groups vanish), committed through the same
-    versioned-snapshot marker protocol as :func:`stream_apply` — a
-    replayed epoch is detected in the target's own ledger and skipped,
-    so the maintenance is exactly-once without trusting the checkpoint.
+    through, zero-count groups vanish, NULL group keys match
+    null-safely). The result replaces the table in one overwrite commit
+    under ``txn=(app id, batch id)``, so a replayed batch is skipped.
 
     Per-batch work is O(batch + touched groups); the maintained table is
-    GROUPS-sized, so even the full-version rewrite is tiny — this is the
-    rare streaming state that never needs the bucket-refresh escape
-    hatch. State at no point rescans the underlying rows.
+    GROUPS-sized, so the full rewrite per batch is tiny. State at no
+    point rescans the underlying rows.
     """
     from changedatacapture_reporting_spark.operators.incremental_agg import (
         aggregate_deltas,
@@ -317,18 +202,17 @@ def stream_maintain_aggregate(
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         session = batch_df.sparkSession
-        run_id = epoch_run_id(epoch_id)
-        if run_id in _committed_epochs(session, target_path):
-            return  # replayed epoch — already visible
         current = read_aggregate(
             session, target_path, group_cols, sum_cols, source_struct
         )
         deltas = aggregate_deltas(batch_df, group_cols, sum_cols)
-        merged = merge_aggregate(current, deltas, group_cols)
-        version_dir = os.path.join(target_path, f"v={run_id}")
-        merged.write.mode("overwrite").parquet(version_dir)
-        # COMMIT POINT — single marker file after the version lands
-        write_text(session, os.path.join(target_path, "_epochs", run_id))
+        write_delta(
+            session,
+            merge_aggregate(current, deltas, group_cols),
+            target_path,
+            mode="overwrite",
+            txn=(_AGG_APP, int(epoch_id)),
+        )
 
     writer = stream.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint_path

@@ -6,11 +6,13 @@ non-time window on a stream).
 
 Per micro-batch the BATCH form runs instead: ``foreachBatch`` applies
 ``operators.temporal.temporal_enrich`` (batch facts × static dimension)
-and lands the enriched rows in a per-epoch directory committed by the
-same marker-file ledger as ``apply_stream`` — a replayed epoch is
-detected and skipped, so enrichment is exactly-once without trusting
-the checkpoint, and a crash between data and marker replays into an
-overwrite. Readers union only committed epochs.
+and appends the enriched rows to a Delta table through
+``sources.delta_table.delta_stream_writer``. Each append carries the
+PROTOCOL's transaction action ``txn=(app id, batch id)``: a replayed
+batch is recognized by the app's recorded watermark and skipped, so
+enrichment is exactly-once without trusting the checkpoint, and a
+crash before the commit leaves only unreferenced files that readers
+never open.
 
 Scale posture: per-batch work is the batch-sized union+window (the
 dimension's version-start rows ride along — dims are small next to
@@ -24,27 +26,20 @@ a stream-state buffer.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from changedatacapture_reporting_spark.fs import listdir, write_text
 from changedatacapture_reporting_spark.operators.temporal import (
     temporal_enrich,
 )
-from changedatacapture_reporting_spark.streaming.populate_stream import (
-    epoch_run_id,
+from changedatacapture_reporting_spark.sources.delta_table import (
+    delta_stream_writer,
+    read_delta,
+    table_versions,
 )
 
-
-def _committed(spark: SparkSession, out_path: str) -> list[str]:
-    return [
-        n
-        for n in listdir(spark, os.path.join(out_path, "_epochs"))
-        if n.startswith("epoch-")
-    ]
+_ENRICH_APP = "stream_temporal_enrich"
 
 
 def stream_temporal_enrich(
@@ -59,24 +54,17 @@ def stream_temporal_enrich(
     value_cols: list[str],
     available_now: bool = True,
 ) -> StreamingQuery:
-    """Drain a fact stream through per-batch temporal enrichment into an
-    epoch-committed parquet target. ``dim`` is an SCD2 frame
+    """Drain a fact stream through per-batch temporal enrichment into a
+    Delta table at ``out_path``. ``dim`` is an SCD2 frame
     (key + value cols + valid_from/valid_to), evaluated per batch."""
     stream = spark.readStream.schema(fact_schema).parquet(facts_path)
+    append = delta_stream_writer(out_path, _ENRICH_APP)
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        session = batch_df.sparkSession
-        run_id = epoch_run_id(epoch_id)
-        if run_id in _committed(session, out_path):
-            return  # replayed epoch — already visible
-        enriched = temporal_enrich(
-            batch_df, dim, key_cols, fact_ts_col, value_cols
+        append(
+            temporal_enrich(batch_df, dim, key_cols, fact_ts_col, value_cols),
+            epoch_id,
         )
-        enriched.write.mode("overwrite").parquet(
-            os.path.join(out_path, f"e={run_id}")
-        )
-        # COMMIT POINT — marker after the epoch directory lands
-        write_text(session, os.path.join(out_path, "_epochs", run_id))
 
     writer = stream.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint_path
@@ -93,14 +81,12 @@ def read_enriched(
     dim: DataFrame,
     value_cols: list[str],
 ) -> DataFrame:
-    """Union of committed epochs (an empty typed frame — fact fields +
-    the dimension's own value types — before the first commit)."""
-    epochs = _committed(spark, out_path)
-    if not epochs:
-        fields = list(fact_schema.fields) + [
-            T.StructField(c, dim.schema[c].dataType) for c in value_cols
-        ]
-        return spark.createDataFrame([], T.StructType(fields))
-    return spark.read.parquet(
-        *[os.path.join(out_path, f"e={e}") for e in epochs]
-    )
+    """The enriched table's latest version (an empty typed frame — fact
+    fields + the dimension's own value types — before the first
+    commit)."""
+    if table_versions(spark, out_path):
+        return read_delta(spark, out_path)
+    fields = list(fact_schema.fields) + [
+        T.StructField(c, dim.schema[c].dataType) for c in value_cols
+    ]
+    return spark.createDataFrame([], T.StructType(fields))

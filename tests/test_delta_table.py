@@ -502,6 +502,35 @@ def test_vacuum_deletes_unreferenced_files_only(spark, tmp_path):
         read_delta(spark, path, version=0).collect()
 
 
+@pytest.mark.parametrize("deletion_vectors", [False, True])
+def test_merge_delta_rows_deleted_counts_target_rows(
+    spark, tmp_path, deletion_vectors
+):
+    """rows_deleted counts the target rows a MERGE removed, not the
+    delete rows in the source: a delete key absent from the target
+    removes nothing and counts nothing, in both modes."""
+    from changedatacapture_reporting_spark.sources.delta_table import (
+        merge_delta,
+    )
+
+    path = str(tmp_path / "t_merge_del")
+    write_delta(
+        spark,
+        spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string"),
+        path,
+    )
+    src = spark.createDataFrame(
+        [(2, None, True), (9, None, True)],
+        "id long, v string, _del boolean",
+    )
+    res = merge_delta(
+        spark, src, path, ["id"], delete_col="_del",
+        deletion_vectors=deletion_vectors,
+    )
+    assert res["rows_deleted"] == 1 and res["rows_upserted"] == 0
+    assert _rows(read_delta(spark, path)) == {(1, "a")}
+
+
 def test_merge_delta_upsert_insert_delete(spark, tmp_path):
     """MERGE semantics: matched rows update, unmatched source rows
     insert, delete-flagged rows delete; only files containing matched

@@ -7,15 +7,14 @@ Two write shapes exist, with different physics:
 
 - non-partitioned writes of an empty frame land ONE schema-bearing
   parquet/json part file (Spark's empty-task special case), so plain
-  reads survive — the versioned-snapshot writers (stream_apply,
-  stream_maintain_aggregate), the purge's per-partition rewrites and
-  the compactor are safe BY SHAPE, pinned here;
+  reads survive — the purge's per-partition rewrites and the compactor
+  are safe BY SHAPE, pinned here;
 - ``partitionBy`` writes of an empty frame land ZERO files — the
   serving snapshot (fixed via the schema-pinned meta, tests in
   test_serving.py), the sharded exporter (fixed via a staged empty
   shard) and the Delta writer (immune by design: the schema rides in
-  the log's metaData action) are each proven here or in their own
-  suites.
+  the log's metaData action; the streaming apply and aggregate targets
+  commit through it) are each proven here or in their own suites.
 """
 
 from __future__ import annotations
@@ -130,9 +129,9 @@ def test_compaction_of_all_empty_files_survives(spark, tmp_path):
 
 
 def test_stream_apply_to_empty_state_stays_readable(spark, tmp_path):
-    """A micro-batch that deletes every live row: the new version is an
-    empty NON-partitioned write (one schema-bearing file) — reads give
-    0 rows and the next batch applies normally."""
+    """A micro-batch that deletes every live row: its MERGE leaves the
+    Delta target with no live rows (the schema rides in the log) —
+    reads give 0 rows and the next batch applies normally."""
     from changedatacapture_reporting_spark.schema import cdc_event_schema
     from changedatacapture_reporting_spark.streaming.apply_stream import (
         read_current_state,
@@ -185,8 +184,8 @@ def test_stream_apply_to_empty_state_stays_readable(spark, tmp_path):
 
 def test_stream_maintain_aggregate_to_zero_groups(spark, tmp_path):
     """All groups vanish (counts fold to zero): the maintained table's
-    new version is empty but readable, and the next batch re-creates
-    groups from the empty frame."""
+    new Delta version is empty but readable (the schema rides in the
+    log), and the next batch re-creates groups from the empty frame."""
     from changedatacapture_reporting_spark.schema import cdc_event_schema
     from changedatacapture_reporting_spark.streaming.apply_stream import (
         read_aggregate,

@@ -580,7 +580,7 @@ def test_stream_apply_maintains_current_state(spark, workdir):
     """Streaming materialized current-state: two event file batches
     drained sequentially through net-changes + MERGE must equal a single
     apply of the whole window to an empty target; a restarted drain with
-    no new data leaves the state untouched (epoch markers)."""
+    no new data leaves the state untouched and adds no Delta version."""
     import datetime as dt
 
     from pyspark.sql import types as T
@@ -590,6 +590,9 @@ def test_stream_apply_maintains_current_state(spark, workdir):
         net_changes,
     )
     from changedatacapture_reporting_spark.schema import cdc_event_schema
+    from changedatacapture_reporting_spark.sources.delta_table import (
+        table_versions,
+    )
     from changedatacapture_reporting_spark.streaming.apply_stream import (
         read_current_state,
         stream_apply,
@@ -648,24 +651,31 @@ def test_stream_apply_maintains_current_state(spark, workdir):
     assert got == ref == {1: ("a2", 11), 3: ("c", 30)}
 
     # replay drain with no new data: state version unchanged
+    versions = table_versions(spark, target)
+    assert versions
     drain()
     again = {r.id: (r.name, r.qty) for r in
              read_current_state(spark, target, pk, vals, src).collect()}
     assert again == got
+    assert table_versions(spark, target) == versions
 
 
 def test_stream_apply_vacuum_keeps_current_readable(spark, workdir):
-    """vacuum_versions removes old snapshot dirs, never the current one;
-    markers survive so replayed epochs still skip."""
+    """vacuum_delta keeping only the newest version reclaims the files
+    older versions replaced, never the current ones; the log keeps the
+    txn watermark, so a replayed drain still skips."""
     import datetime as dt
 
     from pyspark.sql import types as T
 
     from changedatacapture_reporting_spark.schema import cdc_event_schema
+    from changedatacapture_reporting_spark.sources.delta_table import (
+        table_versions,
+        vacuum_delta,
+    )
     from changedatacapture_reporting_spark.streaming.apply_stream import (
         read_current_state,
         stream_apply,
-        vacuum_versions,
     )
 
     src = T.StructType(
@@ -690,108 +700,24 @@ def test_stream_apply_vacuum_keeps_current_readable(spark, workdir):
         ).parquet(ev_path)
         _drain(stream_apply(spark, ev_path, schema, target, ckpt, pk, vals))
 
-    import os
-
-    versions = [d for d in os.listdir(target) if d.startswith("v=")]
-    assert len(versions) == 3
-    removed = vacuum_versions(spark, target, keep=1)
-    assert removed == 2
-    left = [d for d in os.listdir(target) if d.startswith("v=")]
-    assert len(left) == 1
+    versions = table_versions(spark, target)
+    assert len(versions) == 4  # the empty target + one MERGE per batch
+    res = vacuum_delta(
+        spark, target, retain_versions=1, orphan_min_age_minutes=0
+    )
+    assert res["files_deleted"] >= 1  # id 1's first image was replaced
 
     got = {r.id: r.v for r in
            read_current_state(spark, target, pk, vals, src).collect()}
     assert got == {1: "b", 2: "c"}
 
-    # replayed drain after vacuum: markers intact, nothing re-applies
+    # replayed drain after vacuum: txn watermark intact, nothing
+    # re-applies
     _drain(stream_apply(spark, ev_path, schema, target, ckpt, pk, vals))
     again = {r.id: r.v for r in
              read_current_state(spark, target, pk, vals, src).collect()}
     assert again == got
-
-
-def test_stream_apply_bucketed_equals_full_rewrite(spark, workdir):
-    """stream_apply_bucketed (serving-snapshot bucket refresh per batch)
-    must serve the SAME state as stream_apply's full-version rewrite at
-    every drained prefix of the stream — delete, update-carry, and
-    post-bootstrap insert included — and a replayed drain with no new
-    data must be a no-op (the snapshot's LSN watermark filters it)."""
-    import datetime as dt
-
-    from pyspark.sql import types as T
-
-    from changedatacapture_reporting_spark.schema import cdc_event_schema
-    from changedatacapture_reporting_spark.streaming.apply_stream import (
-        read_current_state,
-        read_state_bucketed,
-        stream_apply,
-        stream_apply_bucketed,
-    )
-
-    src = T.StructType(
-        [
-            T.StructField("id", T.IntegerType()),
-            T.StructField("name", T.StringType()),
-            T.StructField("qty", T.IntegerType()),
-        ]
-    )
-    schema = cdc_event_schema(src)
-    ts = dt.datetime(2024, 2, 1, 9, 0, 0)
-    batch1 = [
-        (1, 0, ts, "insert", "t", None, (1, "a", 10)),
-        (2, 0, ts, "insert", "t", None, (2, "b", 20)),
-        (3, 0, ts, "update", "t", (2, "b", 20), (2, "b", 21)),
-    ]
-    batch2 = [
-        (4, 0, ts, "update", "t", (1, "a", 10), (1, "a2", 11)),
-        (5, 0, ts, "delete", "t", (2, "b", 21), None),
-        (6, 0, ts, "insert", "t", None, (3, "c", 30)),
-    ]
-    ev_path = f"{workdir}/bapply_events"
-    pk, vals = ["id"], ["name", "qty"]
-    snap = f"{workdir}/bapply_snap"
-    full = f"{workdir}/bapply_full"
-
-    def drain_both():
-        _drain(stream_apply_bucketed(
-            spark, ev_path, schema, snap, f"{workdir}/bapply_ckpt_b",
-            pk, vals, n_buckets=8,
-        ))
-        _drain(stream_apply(
-            spark, ev_path, schema, full, f"{workdir}/bapply_ckpt_f",
-            pk, vals,
-        ))
-
-    def states():
-        b = {r.id: (r.name, r.qty) for r in read_state_bucketed(
-            spark, snap, pk, vals,
-        ).select(
-            F.col("id").cast("int"), F.col("name"),
-            F.col("qty").cast("int"),
-        ).collect()}
-        f = {r.id: (r.name, r.qty) for r in read_current_state(
-            spark, full, pk, vals, src,
-        ).collect()}
-        return b, f
-
-    spark.createDataFrame(batch1, schema).repartition(1).write.mode(
-        "append"
-    ).parquet(ev_path)
-    drain_both()
-    b, f = states()
-    assert b == f == {1: ("a", 10), 2: ("b", 21)}
-
-    spark.createDataFrame(batch2, schema).repartition(1).write.mode(
-        "append"
-    ).parquet(ev_path)
-    drain_both()
-    b, f = states()
-    assert b == f == {1: ("a2", 11), 3: ("c", 30)}
-
-    # replay with no new data: watermark makes it a no-op
-    drain_both()
-    b2, f2 = states()
-    assert b2 == b and f2 == f
+    assert table_versions(spark, target) == versions
 
 
 def test_stream_maintain_aggregate_equals_direct(spark, workdir):
@@ -799,12 +725,15 @@ def test_stream_maintain_aggregate_equals_direct(spark, workdir):
     file batches — the maintained table must equal the from-scratch
     GROUP BY of the final state after each drain, a group emptied
     mid-stream vanishes, and a restarted drain with no new data changes
-    nothing (epoch ledger)."""
+    nothing and adds no Delta version."""
     import datetime as dt
 
     from pyspark.sql import types as T
 
     from changedatacapture_reporting_spark.schema import cdc_event_schema
+    from changedatacapture_reporting_spark.sources.delta_table import (
+        table_versions,
+    )
     from changedatacapture_reporting_spark.streaming.apply_stream import (
         bootstrap_aggregate,
         read_aggregate,
@@ -869,15 +798,18 @@ def test_stream_maintain_aggregate_equals_direct(spark, workdir):
     final = {"a": (1, 8), "b": (1, 5)}
     assert state() == final  # group c vanished with its last row
 
-    drain()  # replay with nothing new — the ledger makes it a no-op
+    versions = table_versions(spark, target)
+    assert versions
+    drain()  # replay with nothing new — the txn action makes it a no-op
     assert state() == final
+    assert table_versions(spark, target) == versions
 
 
 def test_stream_temporal_enrich_batches_and_replay(spark, workdir):
     """Two fact file batches drain through per-batch temporal enrichment;
     the union of committed epochs equals the batch temporal_enrich of all
-    facts; a replayed drain with nothing new adds nothing (epoch
-    ledger). A late fact (event time long before arrival) still joins
+    facts; a replayed drain with nothing new adds no row and no Delta
+    version. A late fact (event time long before arrival) still joins
     its event-time version."""
     import datetime as dt
 
@@ -885,6 +817,9 @@ def test_stream_temporal_enrich_batches_and_replay(spark, workdir):
 
     from changedatacapture_reporting_spark.operators.temporal import (
         temporal_enrich,
+    )
+    from changedatacapture_reporting_spark.sources.delta_table import (
+        table_versions,
     )
     from changedatacapture_reporting_spark.streaming.enrich_stream import (
         read_enriched,
@@ -941,8 +876,11 @@ def test_stream_temporal_enrich_batches_and_replay(spark, workdir):
     want = {1: "v1", 2: "v2", 3: "v1", 4: None}
     assert state() == want  # late fact joined its EVENT-time version
 
-    drain()  # replay — ledger makes it a no-op
+    versions = table_versions(spark, out)
+    assert versions
+    drain()  # replay — the txn action makes it a no-op
     assert state() == want
+    assert table_versions(spark, out) == versions
 
     # union of epochs == one-shot batch enrichment of all facts
     all_facts = spark.createDataFrame(batch1 + batch2, schema)
@@ -954,16 +892,22 @@ def test_stream_temporal_enrich_batches_and_replay(spark, workdir):
 
 
 def test_stream_maintain_aggregate_crash_recovery(spark, workdir):
-    """Crash between version directory and marker: the epoch replays into
-    an overwrite and the maintained aggregate converges to the same
-    state (the marker is the commit point, the checkpoint is not
-    trusted)."""
+    """Crash after the batch's data files landed but before its Delta
+    commit: the batch replays into a fresh commit and the maintained
+    aggregate converges to the same state (the log entry is the commit
+    point, the checkpoint is not trusted); vacuum_delta then reclaims
+    the lost commit's files."""
     import datetime as dt
+    import os
     import shutil
 
     from pyspark.sql import types as T
 
     from changedatacapture_reporting_spark.schema import cdc_event_schema
+    from changedatacapture_reporting_spark.sources.delta_table import (
+        table_versions,
+        vacuum_delta,
+    )
     from changedatacapture_reporting_spark.streaming.apply_stream import (
         bootstrap_aggregate,
         read_aggregate,
@@ -994,18 +938,16 @@ def test_stream_maintain_aggregate_crash_recovery(spark, workdir):
         gcols, scols,
     ))
 
-    # simulate the crash window: version dir landed, marker did NOT —
-    # remove the marker of the committed (non-bootstrap) epoch
-    import os
-
-    epochs = [e for e in os.listdir(f"{target}/_epochs")
-              if not e.endswith("bootstrap")]
-    assert epochs
-    os.remove(f"{target}/_epochs/{epochs[0]}")
+    # simulate the crash window: the batch's data files landed, its
+    # commit did NOT — remove the newest log entry (the batch's; the
+    # bootstrap is version 0)
+    versions = table_versions(spark, target)
+    assert len(versions) == 2
+    os.remove(f"{target}/_delta_log/{versions[-1]:020d}.json")
 
     # a FRESH checkpoint replays the whole stream (worst case: the
-    # checkpoint was lost with the crash); the epoch re-lands into an
-    # overwrite of its own version dir and re-commits
+    # checkpoint was lost with the crash); the batch re-lands as new
+    # files and re-commits
     shutil.rmtree(f"{workdir}/crash_ckpt1", ignore_errors=True)
     _drain(stream_maintain_aggregate(
         spark, ev_path, schema, target, f"{workdir}/crash_ckpt2",
@@ -1016,6 +958,14 @@ def test_stream_maintain_aggregate_crash_recovery(spark, workdir):
         for r in read_aggregate(spark, target, gcols, scols, src).collect()
     }
     assert got == {"a": (1, 5)}  # exactly once despite the replay
+
+    # the lost commit's files are referenced by no version
+    res = vacuum_delta(spark, target, orphan_min_age_minutes=0)
+    assert res["files_deleted"] >= 1
+    assert {
+        r.grp: (r.n_rows, r.sum_qty)
+        for r in read_aggregate(spark, target, gcols, scols, src).collect()
+    } == got
 
 
 def test_stream_maintain_aggregate_decimal_no_bootstrap(spark, workdir):
@@ -1074,6 +1024,22 @@ def test_stream_maintain_aggregate_decimal_no_bootstrap(spark, workdir):
         "sum_amt"
     ].dataType
     assert isinstance(out_t, T.DecimalType) and out_t.scale == 2
+
+    # a second batch overwrites the committed table: the merged
+    # measure keeps the committed type instead of widening again
+    spark.createDataFrame(
+        [(3, 0, ts, "insert", "t", None, (3, "a", Decimal("1.50")))],
+        schema,
+    ).repartition(1).write.mode("append").parquet(ev_path)
+    _drain(
+        stream_maintain_aggregate(
+            spark, ev_path, schema, target, ckpt, gcols, scols
+        )
+    )
+    out = read_aggregate(spark, target, gcols, scols, src)
+    assert out.schema["sum_amt"].dataType == out_t
+    [row] = out.collect()
+    assert row.n_rows == 3 and row.sum_amt == Decimal("12.50")
 
 
 def test_stream_quality_gate_equals_batch_and_replays_idempotent(spark, tmp_path):
