@@ -57,7 +57,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from changedatacapture_reporting_spark import fs, logstore
-from changedatacapture_reporting_spark.sqltext import sql_str
+from changedatacapture_reporting_spark.sqltext import sql_ident, sql_str
 from changedatacapture_reporting_spark.sources import dvcodec
 
 LOG_DIR = "_delta_log"
@@ -401,14 +401,14 @@ def _eligible_physical_cols(meta: dict | None) -> frozenset | None:
 def _apply_action(state: dict, action: dict, stamp: bool = True) -> None:
     """Fold one log action into ``state``. ``stamp`` (json replay only)
     records, per add, the stats-eligible physical column set of the
-    metaData in effect AT THAT COMMIT — the ground truth that lets
-    metadata_summary distinguish schema evolution (column newer than
-    the file → its absence from the file's stats means all-NULL) from a
-    foreign writer's truncated stats (column existed → absence means
-    UNKNOWN, and counting it as all-null would be a silent wrong
+    metaData in effect AT THAT COMMIT — the ground truth that lets the
+    stats fold (_fold_stats) distinguish schema evolution (column newer
+    than the file → its absence from the file's stats means all-NULL)
+    from a foreign writer's truncated stats (column existed → absence
+    means UNKNOWN, and counting it as all-null would be a silent wrong
     answer; ADVICE r13). Checkpoint-replayed adds pass stamp=False —
     the checkpoint does not preserve per-add commit-time schemas — and
-    get None (unknown provenance; metadata_summary falls back to
+    get None (unknown provenance; the stats fold falls back to
     weaker in-stats signals for them)."""
     if "protocol" in action and action["protocol"]:
         state["protocol"] = action["protocol"]
@@ -2093,7 +2093,12 @@ def read_delta(
     launches (:func:`prune_adds`), and the same predicates are applied
     as row filters — so the result equals ``read_delta().filter(...)``
     exactly; skipping is purely a scan-size optimization. Files written
-    without stats are conservatively scanned."""
+    without stats are conservatively scanned.
+
+    Without ``skip`` the frame remembers its resolved snapshot
+    (:func:`snapshot_of`), so :func:`stats_max` can answer MAX from the
+    log's file statistics. A frame derived from it (filter, select,
+    join) is a new object with no snapshot and is scanned."""
     if timestamp_ms is not None:
         if version is not None:
             raise ValueError("pass version OR timestamp_ms, not both")
@@ -2124,6 +2129,8 @@ def read_delta(
             schema=schema,
         )
     df = _scan_adds(spark, path, state["meta"], adds)
+    if not skip:
+        df._delta_snapshot = (path, state)
     for col, op, val in skip or []:
         c = F.col(col)
         df = df.filter(
@@ -2137,6 +2144,15 @@ def read_delta(
             }[op]
         )
     return df
+
+
+def snapshot_of(df: DataFrame) -> tuple[str, dict] | None:
+    """``(path, resolved log state)`` of a frame :func:`read_delta`
+    returned without ``skip``; None for any other frame, including one
+    derived from it."""
+    # vars(), not getattr: DataFrame.__getattr__ resolves unknown
+    # names as columns, a JVM round trip
+    return vars(df).get("_delta_snapshot")
 
 
 def _file_size(spark: SparkSession, full_path: str) -> int:
@@ -2199,6 +2215,15 @@ def _stats_json_value(v):
     return v
 
 
+def _utc_naive(v):
+    """A datetime as the naive UTC instant timestamp stats hold. A
+    naive ``v`` is read as this process's local time, as ``collect()``
+    renders timestamps and ``F.lit`` reads them."""
+    import datetime as dt
+
+    return v.astimezone(dt.timezone.utc).replace(tzinfo=None)
+
+
 def _file_stats_from_footers(
     path: str,
     rels: list[str],
@@ -2227,8 +2252,8 @@ def _file_stats_from_footers(
         return None
 
     def _convert(v, dt):
-        """Footer value → exactly what the Spark aggregate's collect()
-        would have produced (session TZ is pinned UTC). None = bail."""
+        """Footer value → exactly what the Spark aggregate path records
+        (timestamps as naive UTC instants). None = bail."""
         if isinstance(dt, (T.FloatType, T.DoubleType)):
             f = float(v)
             if f != f:  # NaN — Spark orders NaN greatest; footers vary
@@ -2243,7 +2268,7 @@ def _file_stats_from_footers(
                 return None
             if v.tzinfo is None:
                 return None  # tz-less footer for a tz'd type — bail
-            return v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+            return _utc_naive(v)
         if isinstance(dt, T.TimestampNTZType):
             if not isinstance(v, _dt.datetime) or v.tzinfo is not None:
                 return None
@@ -2464,6 +2489,15 @@ def _file_stats(
         for n in depths:
             by_suffix[n]["/".join(segs[-n:])] = row
 
+    # collect() renders timestamps in this process's local zone; the
+    # stats hold UTC instants, as the footer path writes them
+    local_ts = {
+        f.name for f in schema.fields if isinstance(f.dataType, T.TimestampType)
+    }
+
+    def bound(c: str, v):
+        return _stats_json_value(_utc_naive(v) if c in local_ts else v)
+
     out: dict[str, str] = {}
     for rel in rels:
         r = by_suffix[rel.count("/") + 1].get(rel)
@@ -2478,12 +2512,12 @@ def _file_stats(
             stats = {
                 "numRecords": r["_n"],
                 "minValues": {
-                    c: _stats_json_value(r[f"_min_{c}"])
+                    c: bound(c, r[f"_min_{c}"])
                     for c in eligible
                     if r[f"_min_{c}"] is not None
                 },
                 "maxValues": {
-                    c: _stats_json_value(r[f"_max_{c}"])
+                    c: bound(c, r[f"_max_{c}"])
                     for c in eligible
                     if r[f"_max_{c}"] is not None
                 },
@@ -2562,6 +2596,8 @@ def prune_adds(
     lexicographic. Without a schema the two orders can disagree, and a
     file is pruned only when BOTH prove no match — sound for either
     column semantics (ADVICE r11, medium)."""
+    import datetime as dt
+
     part_cols = part_cols or []
 
     def _keep(add: dict) -> bool:
@@ -2640,6 +2676,22 @@ def prune_adds(
                 if schema is not None and col in schema.fieldNames()
                 else None
             )
+            if isinstance(val, dt.datetime) and (
+                field_type is None or isinstance(field_type, T.TimestampType)
+            ):
+                # timestamp stats are naive UTC instants and the filter
+                # reads a naive probe as local time; a column of unknown
+                # type may be a timestamp_ntz wall clock, so there both
+                # readings must prove no match
+                try:
+                    forms = {_cmp_value(_utc_naive(val))}
+                    if field_type is None:
+                        forms.add(cmp_val)
+                    if not any(_interval_allows(lo, hi, op, f) for f in forms):
+                        return False
+                except (TypeError, ValueError, OverflowError, OSError):
+                    pass  # out of the local clock's range — keep
+                continue
             if isinstance(field_type, _NUMERIC_PRUNE_TYPES):
                 # numeric/decimal column: its stats bounds are canonical
                 # numeric STRINGS — lexicographic comparison here can
@@ -2785,26 +2837,141 @@ def metadata_summary(
     replay. This is the lakehouse trick that answers COUNT(*) / MIN /
     MAX dashboards instantly on a 100 TB table.
 
-    Exactness: stats are written by this engine's one-pass aggregate
-    (write/optimize/merge all recompute them), so the folded values are
-    exact, not estimates. Raises if any live file lacks stats for a
-    requested column — a silent partial answer would be a wrong answer.
-    That refusal is per-(file, column) precise (ADVICE r13): a column
-    absent from a file's stats maps counts as all-NULL ONLY when the
-    file provably lacks the column — proven either by the commit-time
-    schema stamp (json-replayed adds; the column is newer than the
-    file) or, for the ambiguous cases (mergeSchema appends may omit an
-    existing column; checkpoint-replayed adds lose their commit-time
-    schema), by the parquet FOOTER, a once-per-file ~KB metadata read.
-    A foreign writer's truncated stats (dataSkippingNumIndexedCols-
-    style prefixes, nullCount-less writers, loose tightBounds=false
-    stats, value-bearing files without min/max — e.g. real writers
-    skip boolean and NaN bounds) raise instead of contributing a
-    silently wrong term.
-    min/max are returned as canonical strings (ISO for temporals) so one
-    frame covers heterogeneous column types.
+    The fold and its refusals are :func:`_fold_stats`: a live file
+    whose stats cannot give the exact answer raises ValueError instead
+    of contributing a silently wrong term. min/max are returned as
+    canonical strings (ISO for temporals) so one frame covers
+    heterogeneous column types; the result is a local relation, so
+    building and collecting it runs no Spark job.
     """
     state = _resolve_log(spark, path, version)
+    schema = T.StructType.fromJson(json.loads(state["meta"]["schemaString"]))
+    types = {f.name: f.dataType for f in schema.fields}
+
+    def text(c: str, v) -> str | None:
+        if v is None:
+            return None
+        # decimals print canonically whatever form the writer stored
+        t = types[c]
+        return str(_stats_value(v, t) if isinstance(t, T.DecimalType) else v)
+
+    rows = [
+        (c, n_rows, n_nulls, text(c, lo), text(c, hi))
+        for c, n_rows, n_nulls, lo, hi in _fold_stats(
+            spark, path, state, columns
+        )
+    ]
+    return _local_frame(
+        spark,
+        rows,
+        "column_name string, n_rows long, n_nulls long, "
+        "min_value string, max_value string",
+    )
+
+
+_MAX_CASTS = {
+    T.DateType: "date",
+    T.TimestampType: "timestamp",
+    T.TimestampNTZType: "timestamp_ntz",
+}
+
+
+def stats_max(df: DataFrame, column: str) -> DataFrame:
+    """``MAX(column)`` of an unfiltered :func:`read_delta` frame as a
+    one-row local relation (one column, named and typed as ``column``),
+    folded from its snapshot's per-file ``maxValues``: no data file is
+    opened and collecting it runs no Spark job. NULL on an empty table
+    or an all-NULL column, as the aggregate gives. Date, timestamp and
+    timestamp_ntz columns only. Timestamp bounds are folded as UTC
+    instants and carried with an explicit offset, so the answer does
+    not depend on the session time zone.
+
+    Raises ValueError when ``df`` is not such a frame, the column is of
+    another type or has no stats (a partition column), or the stats
+    cannot answer exactly (:func:`_fold_stats`); the caller then runs
+    the aggregate instead."""
+    snap = snapshot_of(df)
+    if snap is None:
+        raise ValueError("not an unfiltered read_delta frame")
+    path, state = snap
+    schema = T.StructType.fromJson(json.loads(state["meta"]["schemaString"]))
+    field = next((f for f in schema.fields if f.name == column), None)
+    cast = field and _MAX_CASTS.get(type(field.dataType))
+    if not cast:
+        raise ValueError(f"no metadata-only MAX for column {column!r}")
+    spark = df.sparkSession
+    [(_, _, _, _, top)] = _fold_stats(spark, path, state, [column])
+    value = "NULL"
+    if top is not None:
+        # str() of the folded value: ISO text, "+00:00" on timestamps
+        value = sql_str(str(_stats_value(top, field.dataType)))
+    # an inline table of constants plans as a LocalRelation
+    return spark.sql(
+        f"SELECT * FROM VALUES (CAST({value} AS {cast})) "
+        f"AS t({sql_ident(column)})"
+    )
+
+
+def _stats_value(v, dtype: T.DataType):
+    """A stats bound as its column's value, the order the fold must
+    use: decimals are canonical strings and temporals ISO strings whose
+    text order breaks across writers (``T`` or space separator, ``Z``
+    or offset suffix). A timestamp bound without an offset is a UTC
+    instant, the form :func:`_file_stats` writes. An unparsable bound
+    raises ValueError."""
+    import datetime as _dt
+
+    try:
+        if isinstance(dtype, T.DecimalType):
+            return decimal.Decimal(str(v))
+        if isinstance(dtype, T.DateType):
+            return _dt.date.fromisoformat(v)
+        if isinstance(dtype, T.TimestampType):
+            t = _dt.datetime.fromisoformat(v)
+            if t.tzinfo is None:
+                return t.replace(tzinfo=_dt.timezone.utc)
+            return t.astimezone(_dt.timezone.utc)
+        if isinstance(dtype, T.TimestampNTZType):
+            t = _dt.datetime.fromisoformat(v)
+            if t.tzinfo is not None:
+                raise ValueError("offset on a timestamp_ntz bound")
+            return t
+    except (TypeError, ValueError, decimal.InvalidOperation) as e:
+        raise ValueError(
+            f"unparsable {dtype.simpleString()} stats bound {v!r}"
+        ) from e
+    return v
+
+
+def _fold_stats(
+    spark: SparkSession,
+    path: str,
+    state: dict,
+    columns: list[str] | None = None,
+) -> list[tuple]:
+    """Fold the live files' committed stats of a resolved snapshot
+    into ``(column, n_rows, n_nulls, min, max)`` per column (None =
+    every eligible one). min/max are the winning files' stats bounds as
+    written, chosen by value (:func:`_stats_value`); None when every
+    row is NULL or the table is empty.
+
+    Exactness: stats are written by this engine's one-pass aggregate
+    (write/optimize/merge all recompute them), so the folded values are
+    exact, not estimates. Raises ValueError if any live file lacks stats
+    for a requested column — a silent partial answer would be a wrong
+    answer. That refusal is per-(file, column) precise (ADVICE r13): a
+    column absent from a file's stats maps counts as all-NULL ONLY when
+    the file provably lacks the column — proven either by the
+    commit-time schema stamp (json-replayed adds; the column is newer
+    than the file) or, for the ambiguous cases (mergeSchema appends may
+    omit an existing column; checkpoint-replayed adds lose their
+    commit-time schema), by the parquet FOOTER, a once-per-file ~KB
+    metadata read. Live deletion vectors, a foreign writer's truncated
+    stats (dataSkippingNumIndexedCols-style prefixes, nullCount-less
+    writers, loose tightBounds=false stats, value-bearing files without
+    min/max — e.g. real writers skip boolean and NaN bounds) and
+    partition or non-atomic columns raise instead of contributing a
+    silently wrong term."""
     adds = list(state["files"].values())
     schema = T.StructType.fromJson(json.loads(state["meta"]["schemaString"]))
     part_cols = list(state["meta"].get("partitionColumns") or [])
@@ -2860,9 +3027,7 @@ def metadata_summary(
         )
     rows = []
     n_rows = sum(p["numRecords"] for p in parsed)
-    decimal_cols = {
-        f.name for f in schema.fields if isinstance(f.dataType, T.DecimalType)
-    }
+    types = {f.name: f.dataType for f in schema.fields}
     footer_cache: dict[str, frozenset] = {}
 
     def _footer_fields(rel_enc: str) -> frozenset:
@@ -2955,26 +3120,19 @@ def metadata_summary(
                 mins.append(mv[k])
             if k in xv:
                 maxs.append(xv[k])
-        if c in decimal_cols:
-            # decimal stats are protocol-serialized as canonical strings
-            # (exactness, see _stats_json_value); fold them numerically —
-            # a lexicographic min("10.0","9.0") would be wrong
-            mins = [decimal.Decimal(str(v)) for v in mins]
-            maxs = [decimal.Decimal(str(v)) for v in maxs]
+        # fold by value: decimal and temporal bounds are strings whose
+        # text order is not their value order (min("10.0", "9.0"))
+        t = types[c]
         rows.append(
             (
                 c,
                 int(n_rows),
                 int(n_nulls),
-                str(min(mins)) if mins else None,
-                str(max(maxs)) if maxs else None,
+                min(mins, key=lambda v: _stats_value(v, t)) if mins else None,
+                max(maxs, key=lambda v: _stats_value(v, t)) if maxs else None,
             )
         )
-    return spark.createDataFrame(
-        rows,
-        "column_name string, n_rows long, n_nulls long, "
-        "min_value string, max_value string",
-    )
+    return rows
 
 
 def _strip_type_metadata(dt: T.DataType) -> T.DataType:
@@ -6292,6 +6450,30 @@ def last_txn_version(spark: SparkSession, path: str, app_id: str) -> int:
     if not table_versions(spark, path):
         return -1
     return _resolve_log(spark, path, None)["txns"].get(app_id, -1)
+
+
+def check_stream_checkpoint(
+    spark: SparkSession, checkpoint_path: str, path: str, app_id: str
+) -> None:
+    """Refuse a Structured Streaming checkpoint whose planned batches
+    (``offsets/<n>``) stop below the txn watermark ``app_id`` already
+    records on the table: such a checkpoint is not the one that wrote
+    the table, it numbers batches from 0 again, and the watermark would
+    skip every batch id at or below it, silently dropping new rows. A
+    checkpoint that planned the watermark's batch but crashed before
+    committing it (``offsets/<wm>`` without ``commits/<wm>``) passes:
+    its replay is skipped inside the commit, as designed."""
+    offsets = fs.listdir(spark, fs.join(checkpoint_path, "offsets"))
+    planned = max((int(n) for n in offsets if n.isdigit()), default=-1)
+    wm = last_txn_version(spark, path, app_id)
+    if planned < wm:
+        raise ValueError(
+            f"checkpoint {checkpoint_path!r} has planned batches only up "
+            f"to {planned}, but {path!r} already records app id "
+            f"{app_id!r} up to batch {wm}; a new checkpoint would restart "
+            "at batch 0 and its batches would be skipped as replays — "
+            "resume from the original checkpoint or write to a new table"
+        )
 
 
 def delta_stream_writer(

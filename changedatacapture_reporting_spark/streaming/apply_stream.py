@@ -16,6 +16,9 @@ action ``txn=(app id, batch id)``. A micro-batch the engine replays
 (a crash between the Delta commit and the checkpoint commit) finds its
 batch id at or below the app's recorded watermark and is skipped
 inside the commit — sink-side idempotency, not checkpoint trust. A
+checkpoint whose planned batches stop below the app's recorded
+watermark (a new one, against an existing target) would restart at
+batch 0 and be skipped, so it raises at start. A
 crash before the commit leaves only unreferenced files: readers never
 open them and ``vacuum_delta`` reclaims them. Readers resolve the
 latest committed version, which is always complete.
@@ -30,6 +33,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from changedatacapture_reporting_spark.operators.net_changes import net_changes
 from changedatacapture_reporting_spark.sources.delta_table import (
+    check_stream_checkpoint,
     delta_stream_merger,
     read_delta,
     table_versions,
@@ -81,7 +85,10 @@ def stream_apply(
     value_cols: list[str],
     available_now: bool = True,
 ) -> StreamingQuery:
-    """Maintain the current-state table from a CDC event stream."""
+    """Maintain the current-state table from a CDC event stream.
+    Raises ValueError when ``checkpoint_path`` planned no batch up to
+    the txn watermark the target already records for this stream."""
+    check_stream_checkpoint(spark, checkpoint_path, target_path, _APPLY_APP)
     state = _state_struct(event_schema["after"].dataType, pk_cols, value_cols)
     if not table_versions(spark, target_path):
         write_delta(spark, spark.createDataFrame([], state), target_path)
@@ -191,7 +198,11 @@ def stream_maintain_aggregate(
     Per-batch work is O(batch + touched groups); the maintained table is
     GROUPS-sized, so the full rewrite per batch is tiny. State at no
     point rescans the underlying rows.
+
+    Raises ValueError when ``checkpoint_path`` planned no batch up to
+    the txn watermark the target already records for this stream.
     """
+    check_stream_checkpoint(spark, checkpoint_path, target_path, _AGG_APP)
     from changedatacapture_reporting_spark.operators.incremental_agg import (
         aggregate_deltas,
         merge_aggregate,

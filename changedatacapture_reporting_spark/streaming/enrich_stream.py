@@ -34,6 +34,7 @@ from changedatacapture_reporting_spark.operators.temporal import (
     temporal_enrich,
 )
 from changedatacapture_reporting_spark.sources.delta_table import (
+    check_stream_checkpoint,
     delta_stream_writer,
     read_delta,
     table_versions,
@@ -56,7 +57,10 @@ def stream_temporal_enrich(
 ) -> StreamingQuery:
     """Drain a fact stream through per-batch temporal enrichment into a
     Delta table at ``out_path``. ``dim`` is an SCD2 frame
-    (key + value cols + valid_from/valid_to), evaluated per batch."""
+    (key + value cols + valid_from/valid_to), evaluated per batch.
+    Raises ValueError when ``checkpoint_path`` planned no batch up to
+    the txn watermark ``out_path`` already records for this stream."""
+    check_stream_checkpoint(spark, checkpoint_path, out_path, _ENRICH_APP)
     stream = spark.readStream.schema(fact_schema).parquet(facts_path)
     append = delta_stream_writer(out_path, _ENRICH_APP)
 

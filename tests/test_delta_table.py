@@ -808,6 +808,104 @@ def test_stats_edge_cases_all_null_and_empty(spark, tmp_path):
     }
 
 
+def test_metadata_summary_plans_as_a_local_relation(spark, tmp_path):
+    """The summary frame is a JVM-local relation: no Python-RDD scan,
+    so no Python-worker job when it is executed."""
+    from changedatacapture_reporting_spark.sources.delta_table import (
+        metadata_summary,
+    )
+
+    path = str(tmp_path / "local")
+    write_delta(
+        spark, spark.createDataFrame([(1, "a"), (2, None)], "id long, v string"),
+        path,
+    )
+    df = metadata_summary(spark, path)
+    plan = df.repartition(1)._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan
+    assert "LocalTableScan" in plan
+    assert sorted(tuple(r) for r in df.collect()) == [
+        ("id", 2, 0, "1", "2"),
+        ("v", 2, 1, "a", "a"),
+    ]
+
+
+def test_stats_fold_orders_timestamp_bounds_by_instant(spark, tmp_path):
+    """Timestamp bounds in another writer's text form (``T`` separator,
+    ``Z`` suffix) fold by instant, not by text: ``2024-01-01T09:00Z``
+    sorts after ``2024-01-01 10:00`` as a string but is the earlier
+    instant. metadata_summary returns the winning bound as written."""
+    from changedatacapture_reporting_spark.sources.delta_table import (
+        metadata_summary,
+        stats_max,
+    )
+
+    path = str(tmp_path / "ts_forms")
+    for stamp in ("2024-01-01 09:00:00", "2024-01-01 10:00:00"):
+        write_delta(
+            spark, spark.sql(f"select timestamp'{stamp}' as ts"), path
+        )
+
+    def foreign_form(st):
+        for m in ("minValues", "maxValues"):
+            st[m]["ts"] = "2024-01-01T09:00:00.000Z"
+        return st
+
+    _rewrite_commit_stats(spark, path, 0, foreign_form)
+    [row] = metadata_summary(spark, path).collect()
+    assert row["min_value"] == "2024-01-01T09:00:00.000Z"
+    assert row["max_value"] == "2024-01-01 10:00:00"
+    top = stats_max(read_delta(spark, path), "ts")
+    assert top.selectExpr("cast(ts as string)").head()[0] == (
+        "2024-01-01 10:00:00"
+    )
+
+
+def test_aggregate_path_timestamp_stats_are_utc_instants(spark, tmp_path):
+    """Outside a UTC session the stats come from the one-pass aggregate,
+    whose collect() renders timestamps in the driver process's local
+    zone. They are recorded as UTC instants, the footer path's form, so
+    in a driver whose zone is neither UTC nor the session's, stats_max
+    and data skipping agree with the scan."""
+    import time
+
+    from changedatacapture_reporting_spark.sources.delta_table import (
+        stats_max,
+    )
+
+    path = str(tmp_path / "agg_tz")
+    ny = spark.newSession()
+    ny.conf.set("spark.sql.session.timeZone", "America/New_York")
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "Asia/Kolkata"
+    time.tzset()
+    try:
+        for stamp in ("2024-03-31 22:30:00", "2024-03-31 20:00:00.25"):
+            write_delta(ny, ny.sql(f"select timestamp'{stamp}' as ts"), path)
+        log = os.path.join(path, "_delta_log", f"{0:020d}.json")
+        with open(log) as f:
+            [stats] = [
+                json.loads(json.loads(line)["add"]["stats"])
+                for line in f
+                if '"add"' in line
+            ]
+        # 22:30 in New York (EDT) is 02:30 UTC the next day
+        assert stats["maxValues"]["ts"] == "2024-04-01 02:30:00"
+
+        df = read_delta(ny, path)
+        latest = df.agg(F.max("ts")).head()[0]
+        assert stats_max(df, "ts").head()[0] == latest
+        # a naive probe is local time, as the row filter reads it
+        kept = read_delta(ny, path, skip=[("ts", ">=", latest)])
+        assert kept.count() == 1
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+
+
 def test_read_delta_skip_on_bool_partition_column(spark, tmp_path):
     """bool("false") is True in Python — the pruner must parse boolean
     partition strings explicitly or a (flag, '=', False) skip prunes the

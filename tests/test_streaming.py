@@ -3,6 +3,7 @@ exactly-once), and streaming windows agreeing with their batch analogs."""
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
@@ -966,6 +967,140 @@ def test_stream_maintain_aggregate_crash_recovery(spark, workdir):
         r.grp: (r.n_rows, r.sum_qty)
         for r in read_aggregate(spark, target, gcols, scols, src).collect()
     } == got
+
+
+def test_fresh_checkpoint_on_watermarked_target_raises(spark, workdir):
+    """A new checkpoint numbers batches from 0 again, so against a
+    target whose txn watermark is already past 0 its batches would be
+    skipped as replays and new rows silently dropped. Ids 1 and 2 drain
+    (watermark 1), id 3 arrives, the checkpoint is lost: the restart
+    raises, naming the app id and the watermark, and the original
+    checkpoint still applies id 3. The aggregate and enrichment streams
+    refuse the same way."""
+    import datetime as dt
+
+    from pyspark.sql import types as T
+
+    from changedatacapture_reporting_spark.schema import cdc_event_schema
+    from changedatacapture_reporting_spark.sources.delta_table import (
+        write_delta,
+    )
+    from changedatacapture_reporting_spark.streaming.apply_stream import (
+        read_current_state,
+        stream_apply,
+        stream_maintain_aggregate,
+    )
+    from changedatacapture_reporting_spark.streaming.enrich_stream import (
+        stream_temporal_enrich,
+    )
+
+    src = T.StructType(
+        [T.StructField("id", T.IntegerType()), T.StructField("v", T.StringType())]
+    )
+    schema = cdc_event_schema(src)
+    ts = dt.datetime(2024, 2, 1, 9, 0, 0)
+    ev_path, target = f"{workdir}/fc_events", f"{workdir}/fc_target"
+    ckpt = f"{workdir}/fc_ckpt"
+    pk, vals = ["id"], ["v"]
+
+    def add_event(i, v):
+        spark.createDataFrame(
+            [(i, 0, ts, "insert", "t", None, (i, v))], schema
+        ).repartition(1).write.mode("append").parquet(ev_path)
+
+    def drain(checkpoint):
+        _drain(stream_apply(spark, ev_path, schema, target, checkpoint, pk, vals))
+
+    def state():
+        return sorted(
+            tuple(r)
+            for r in read_current_state(spark, target, pk, vals, src).collect()
+        )
+
+    add_event(1, "a")
+    drain(ckpt)
+    add_event(2, "b")
+    drain(ckpt)
+    add_event(3, "c")
+    os.rename(ckpt, f"{ckpt}_lost")
+    with pytest.raises(ValueError, match=r"'stream_apply' up to batch 1"):
+        stream_apply(spark, ev_path, schema, target, ckpt, pk, vals)
+    assert state() == [(1, "a"), (2, "b")]
+    os.rename(f"{ckpt}_lost", ckpt)
+    drain(ckpt)
+    assert state() == [(1, "a"), (2, "b"), (3, "c")]
+
+    # the other two streams refuse before reading a batch
+    starts = {
+        "stream_maintain_aggregate": lambda out, cp: stream_maintain_aggregate(
+            spark, ev_path, schema, out, cp, ["v"], {}
+        ),
+        "stream_temporal_enrich": lambda out, cp: stream_temporal_enrich(
+            spark, ev_path, schema, None, out, cp, pk, "commit_ts", vals
+        ),
+    }
+    for app, start in starts.items():
+        out = f"{workdir}/fc_{app}"
+        write_delta(spark, spark.range(1), out, txn=(app, 0))
+        with pytest.raises(ValueError, match=f"'{app}' up to batch 0"):
+            start(out, f"{out}_ckpt")
+
+
+def test_first_batch_crash_before_checkpoint_commit_replays(spark, workdir):
+    """Crash after batch 0's Delta commit (watermark 0) but before the
+    engine wrote ``commits/0``: the checkpoint holds ``offsets/0`` and no
+    commit. The restart on the same checkpoint is accepted, replays
+    batch 0, and the watermark skips it: no new table version, same
+    state."""
+    import datetime as dt
+
+    from pyspark.sql import types as T
+
+    from changedatacapture_reporting_spark.schema import cdc_event_schema
+    from changedatacapture_reporting_spark.sources.delta_table import (
+        last_txn_version,
+        table_versions,
+    )
+    from changedatacapture_reporting_spark.streaming.apply_stream import (
+        read_current_state,
+        stream_apply,
+    )
+
+    src = T.StructType(
+        [T.StructField("id", T.IntegerType()), T.StructField("v", T.StringType())]
+    )
+    schema = cdc_event_schema(src)
+    ts = dt.datetime(2024, 2, 1, 9, 0, 0)
+    ev_path, target = f"{workdir}/c0_events", f"{workdir}/c0_target"
+    ckpt = f"{workdir}/c0_ckpt"
+    spark.createDataFrame(
+        [(1, 0, ts, "insert", "t", None, (1, "a"))], schema
+    ).repartition(1).write.mode("append").parquet(ev_path)
+
+    def state():
+        return sorted(
+            tuple(r)
+            for r in read_current_state(
+                spark, target, ["id"], ["v"], src
+            ).collect()
+        )
+
+    def drain():
+        _drain(stream_apply(
+            spark, ev_path, schema, target, ckpt, ["id"], ["v"]
+        ))
+
+    drain()
+    assert last_txn_version(spark, target, "stream_apply") == 0
+    versions, before = table_versions(spark, target), state()
+    assert os.path.exists(f"{ckpt}/offsets/0")
+    for name in ("0", ".0.crc"):  # the checksum is written with it
+        os.remove(f"{ckpt}/commits/{name}")
+
+    drain()
+    assert table_versions(spark, target) == versions
+    assert state() == before == [(1, "a")]
+    assert os.path.exists(f"{ckpt}/commits/0")  # the replay committed
 
 
 def test_stream_maintain_aggregate_decimal_no_bootstrap(spark, workdir):
