@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from changedatacapture_reporting_spark.functions.text import tokens
 
 from changedatacapture_reporting_spark import fs
+from changedatacapture_reporting_spark.sources.delta_table import _local_frame
 
 
 def shard_assignment(key: Column, n_shards: int) -> Column:
@@ -69,6 +70,26 @@ def shard_stats(
             F.sum("_b").alias("n_bytes"),
         )
     )
+
+
+def shard_file_counts(spark: SparkSession, path: str) -> DataFrame:
+    """(shard, n_files) per ``shard=K`` directory under ``path``, counted
+    from what actually landed (crash evidence would show up here as a
+    missing manifest, not a wrong one) — via fs.* so scheme-qualified
+    sinks (s3a://, hdfs://) work, not just the local filesystem. A
+    local relation, so joining it runs no Python worker."""
+    files = []
+    for entry in fs.listdir(spark, path):
+        if not entry.startswith("shard="):
+            continue
+        k = int(entry.split("=", 1)[1])
+        n = sum(
+            1
+            for f in fs.listdir(spark, fs.join(path, entry))
+            if f.endswith(".parquet") or f.endswith(".json")
+        )
+        files.append((k, n))
+    return _local_frame(spark, files, "shard long, n_files long")
 
 
 def export_shards(
@@ -118,25 +139,8 @@ def export_shards(
             .save(fs.join(path, "shard=0"))
         )
 
-    # count files per shard from what actually landed (crash evidence
-    # would show up here as a missing manifest, not a wrong one) — via
-    # fs.* so scheme-qualified sinks (s3a://, hdfs://) work, not just
-    # the local filesystem
-    files = []
-    for entry in fs.listdir(spark, path):
-        if not entry.startswith("shard="):
-            continue
-        k = int(entry.split("=", 1)[1])
-        n = sum(
-            1
-            for f in fs.listdir(spark, fs.join(path, entry))
-            if f.endswith(".parquet") or f.endswith(".json")
-        )
-        files.append((k, n))
-    file_counts = spark.createDataFrame(files, "shard long, n_files long")
-
     manifest = shard_stats(df, n_shards, id_col, text_col).join(
-        file_counts, "shard", "left"
+        shard_file_counts(spark, path), "shard", "left"
     )
     manifest_path = fs.join(path, "_manifest")
     manifest.repartition(1).write.mode("overwrite").parquet(manifest_path)

@@ -1333,7 +1333,8 @@ def _legacy_dv_entries(
         "_dv_id",
         F.element_at(F.split(F.input_file_name(), "/"), -2),
     )
-    valid = spark.createDataFrame(
+    valid = _local_frame(
+        spark,
         [(d.split("/")[-1], k) for d, ks in pairs.items() for k in ks],
         "_dv_id string, path string",
     )

@@ -15,16 +15,21 @@ paired event model (schema.cdc_event_schema):
 - ``changed_columns``    — F15: mask bit per 1-based column ordinal
 - ``with_commit_time``   — F13 ``fn_cdc_map_lsn_to_time``: broadcast join
                            against an (lsn → commit_ts) mapping table
-- ``mssql_rows_to_events`` — op 1/2 rows pass through; op 3/4 pairs join on
-                           (lsn, seqval) into single update events. The join
+- ``mssql_rows_to_events`` — op 1/2 rows pass through; op 3/4 pairs match on
+                           (lsn, seqval) into single update events. The key
                            includes ``__$seqval`` — fixing the reference's
                            same-transaction cross-match gap (its J1 joins on
                            lsn + column + pk only, populate:361–364).
 
-At scale: the 3⋈4 pairing is an equi-join on (lsn, seqval) — unique per
-update, uniformly distributed (LSNs are monotone), so AQE sort-merge
-handles any volume; the lsn→time map is tiny (one row per transaction
-batch) and broadcasts.
+At scale: the reference reads its CDC function four times per run (one read
+per operation, populate:319/353/375/386) and joins the update halves. Here a
+window's rows are read once and joined once to the lsn→time map, which is
+tiny (one row per transaction batch) and broadcasts; the 3⋈4 pairing is one
+hash aggregation on (lsn, seqval) — a key unique per update and uniformly
+distributed (LSNs are monotone) — so the only exchange is that grouping's
+and there is no self-join. Past 128 keys per task (Spark's default
+threshold) the object-hash aggregation falls back to sorting, which
+spills, so any volume fits.
 """
 
 from __future__ import annotations
@@ -94,6 +99,16 @@ def mssql_rows_to_events(
     long, ``__$operation`` int ∈ {1,2,3,4}, ``__$update_mask`` long,
     ``table_name`` string, plus one column per ``image_cols`` (the row
     image). ``commit_ts`` may be present, or supplied via ``lsn_time_map``.
+
+    One scan of ``rows``, one join to the LSN map, one hash exchange: a
+    ``groupBy(lsn, seq)`` collects each operation's
+    ``(commit_ts, table_name, image)`` entries, and one ``inline`` emits
+    every op-1 entry as a delete, every op-2 entry as an insert and every
+    op-3 × op-4 pair of a group as an update (commit_ts and table_name
+    from the op-3 side). This is the inner join on (lsn, seq), duplicate
+    keys and all: unpaired halves, updates with a NULL key and unknown
+    operations emit nothing; deletes and inserts pass through as they
+    are.
     """
     base = rows.withColumn("lsn", parse_lsn(F.col("`__$start_lsn`"))).withColumn(
         "seq", F.expr("CAST(`__$seqval` AS BIGINT)")
@@ -103,7 +118,7 @@ def mssql_rows_to_events(
 
     # the row image and its typed NULL as SQL text, typed from the input
     # schema (a name matches exactly, else case-insensitively, as Spark
-    # resolves it): each branch is then one filter and one selectExpr
+    # resolves it)
     exact = {f.name: f for f in rows.schema.fields}
     folded = {f.name.lower(): f for f in rows.schema.fields}
     fields = [exact.get(c) or folded[c.lower()] for c in image_cols]
@@ -111,29 +126,34 @@ def mssql_rows_to_events(
         ", ".join(f"{sql_str(f.name)}, {sql_ident(f.name)}" for f in fields)
     )
     no_image = f"CAST(NULL AS STRUCT<{T.StructType(fields).toDDL()}>)"
-    common = ["lsn", "seq", "commit_ts", "table_name"]
+    keyed = "lsn IS NOT NULL AND seq IS NOT NULL"
 
-    def rows_of(op: int) -> DataFrame:
-        return base.filter(f"`__$operation` = {op}")
+    def entries(op: int, cond: str = "TRUE") -> str:
+        return (
+            f"collect_list(IF(`__$operation` = {op} AND {cond}, named_struct("
+            f"'commit_ts', commit_ts, 'table_name', table_name, "
+            f"'image', {image}), NULL)) AS op{op}"
+        )
 
-    deletes = rows_of(OP_DELETE_ROW).selectExpr(
-        *common, "'delete' AS op", f"{image} AS before", f"{no_image} AS after"
-    )
-    inserts = rows_of(OP_INSERT_ROW).selectExpr(
-        *common, "'insert' AS op", f"{no_image} AS before", f"{image} AS after"
-    )
-    # 3⋈4 pairing on (lsn, seq) — one row per update, seqval included
-    before_rows = rows_of(OP_UPDATE_BEFORE).selectExpr(
-        *common, f"{image} AS before"
-    )
-    after_rows = rows_of(OP_UPDATE_AFTER).selectExpr(
-        "lsn", "seq", f"{image} AS after"
-    )
-    updates = before_rows.join(
-        after_rows, on=["lsn", "seq"], how="inner"
-    ).selectExpr(*common, "'update' AS op", "before", "after")
+    def event(op: str, side: str, before: str, after: str) -> str:
+        return (
+            f"named_struct('commit_ts', {side}.commit_ts, 'op', '{op}', "
+            f"'table_name', {side}.table_name, 'before', {before}, "
+            f"'after', {after})"
+        )
 
-    out = updates.unionByName(deletes).unionByName(inserts)
-    return out.select(
-        "lsn", "seq", "commit_ts", "op", "table_name", "before", "after"
+    grouped = base.groupBy("lsn", "seq").agg(
+        F.expr(entries(OP_DELETE_ROW)),
+        F.expr(entries(OP_INSERT_ROW)),
+        F.expr(entries(OP_UPDATE_BEFORE, keyed)),
+        F.expr(entries(OP_UPDATE_AFTER, keyed)),
     )
+    emitted = "inline(concat({}, {}, flatten({})))".format(
+        f"transform(op{OP_DELETE_ROW}, d -> "
+        f"{event('delete', 'd', 'd.image', no_image)})",
+        f"transform(op{OP_INSERT_ROW}, i -> "
+        f"{event('insert', 'i', no_image, 'i.image')})",
+        f"transform(op{OP_UPDATE_BEFORE}, b -> transform(op{OP_UPDATE_AFTER},"
+        f" a -> {event('update', 'b', 'b.image', 'a.image')}))",
+    )
+    return grouped.selectExpr("lsn", "seq", emitted)

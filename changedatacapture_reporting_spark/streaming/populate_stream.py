@@ -42,6 +42,11 @@ from changedatacapture_reporting_spark.operators.populate import (
     commit_batch,
     recover_sink,
 )
+from changedatacapture_reporting_spark.sources.delta_table import (
+    check_stream_checkpoint,
+)
+
+_DELTA_APP = "stream_populate"  # txn app id of the Delta sink's commits
 
 
 def epoch_run_id(epoch_id: int) -> str:
@@ -74,11 +79,16 @@ def stream_populate(
     transaction action IS the exactly-once marker (a replayed epoch is
     skipped inside the commit, surviving checkpoints), so the parquet
     sink's run-id sidecar scan and recovery pass simply don't exist on
-    this path.
+    this path. It raises ValueError when ``checkpoint_path`` planned no
+    batch up to the txn watermark the sink already records for this
+    stream: a new checkpoint would number its batches from 0 again and
+    the watermark would skip them.
     """
     flags = flags or CompatFlags()
     if sink_format not in ("parquet", "delta"):
         raise ValueError(f"unsupported sink_format: {sink_format!r}")
+    if sink_format == "delta":
+        check_stream_checkpoint(spark, checkpoint_path, sink_path, _DELTA_APP)
     stream = spark.readStream.schema(event_schema).parquet(events_path)
 
     def write_batch(batch_df, epoch_id: int) -> None:
@@ -113,7 +123,7 @@ def stream_populate(
                     sink_path,
                     pk_cols,
                     salt_buckets=salt_buckets,
-                    txn=("stream_populate", int(epoch_id)),
+                    txn=(_DELTA_APP, int(epoch_id)),
                 )
             else:
                 commit_batch(

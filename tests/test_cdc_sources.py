@@ -6,6 +6,8 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -79,6 +81,153 @@ def test_mssql_rows_pair_updates_on_seqval(spark):
     assert got[(6, 0, "delete")][1] is None
     assert got[(7, 0, "insert")][0] is None
     assert len(got) == 4
+
+
+def _four_branch_pairing(rows, image_cols, lsn_time_map=None):
+    """Reference model of the MSSQL pairing: the reference's four reads
+    (deletes, inserts, update-before, update-after) with op 3 joined to
+    op 4 on (lsn, seq)."""
+    from changedatacapture_reporting_spark.sources.mssql_cdc import (
+        with_commit_time,
+    )
+
+    base = rows.withColumn("lsn", parse_lsn(F.col("`__$start_lsn`"))).withColumn(
+        "seq", F.expr("CAST(`__$seqval` AS BIGINT)")
+    )
+    if lsn_time_map is not None:
+        base = with_commit_time(base, lsn_time_map)
+    fields = [rows.schema[c] for c in image_cols]
+    image = "named_struct({})".format(
+        ", ".join(f"'{f.name}', `{f.name}`" for f in fields)
+    )
+    no_image = f"CAST(NULL AS STRUCT<{T.StructType(fields).toDDL()}>)"
+    common = ["lsn", "seq", "commit_ts", "table_name"]
+
+    def rows_of(op):
+        return base.filter(f"`__$operation` = {op}")
+
+    deletes = rows_of(1).selectExpr(
+        *common, "'delete' AS op", f"{image} AS before", f"{no_image} AS after"
+    )
+    inserts = rows_of(2).selectExpr(
+        *common, "'insert' AS op", f"{no_image} AS before", f"{image} AS after"
+    )
+    before_rows = rows_of(3).selectExpr(*common, f"{image} AS before")
+    after_rows = rows_of(4).selectExpr("lsn", "seq", f"{image} AS after")
+    updates = before_rows.join(
+        after_rows, on=["lsn", "seq"], how="inner"
+    ).selectExpr(*common, "'update' AS op", "before", "after")
+    return updates.unionByName(deletes).unionByName(inserts).select(
+        "lsn", "seq", "commit_ts", "op", "table_name", "before", "after"
+    )
+
+
+_CDC_ROW_DDL = (
+    "`__$start_lsn` string, `__$seqval` long, `__$operation` int,"
+    " `__$update_mask` long, table_name string, id int, name string"
+)
+_T1, _T2 = dt.datetime(2024, 1, 1), dt.datetime(2024, 1, 2)
+
+
+def _local(spark, rows, ddl):
+    """``rows`` as a local relation (a list would plan as a Python RDD,
+    a Python-worker job per use): object columns keep None as NULL."""
+    import pandas as pd
+
+    schema = T.StructType.fromDDL(ddl)
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=schema.fieldNames(), dtype=object), schema
+    )
+
+
+def _lsn_hex(n):
+    return None if n is None else f"0x{n:020x}"
+
+
+_cdc_row = st.tuples(
+    st.sampled_from([None, 1, 2, 3]).map(_lsn_hex),
+    st.sampled_from([None, 0, 1]),
+    st.sampled_from([None, 0, 1, 2, 3, 4, 5]),
+    st.just(0),
+    st.sampled_from(["t", "u", None]),
+    st.sampled_from([1, 2, None]),
+    st.sampled_from(["a", "b", None]),
+    st.sampled_from([_T1, _T2, None]),
+)
+_map_row = st.tuples(st.sampled_from([1, 2, 4]), st.sampled_from([_T1, _T2, None]))
+# every listed shape at once: duplicate (lsn, seq, op) rows, an unpaired
+# op 3 and op 4, ops 0/5/NULL, NULL lsn and seqval, a map miss (lsn 3)
+# and a duplicated map lsn (1)
+_ALL_SHAPES = [
+    (_lsn_hex(1), 0, 3, 0, "t", 1, "a", _T1),
+    (_lsn_hex(1), 0, 3, 0, "t", 1, "b", _T1),
+    (_lsn_hex(1), 0, 4, 0, "t", 1, "c", _T1),
+    (_lsn_hex(1), 1, 3, 0, "t", 2, "a", _T1),
+    (_lsn_hex(2), 0, 4, 0, "u", 2, "b", _T2),
+    (_lsn_hex(2), 1, 1, 0, "u", 2, "b", _T2),
+    (_lsn_hex(2), 1, 1, 0, "u", 2, "b", _T2),
+    (_lsn_hex(3), 0, 2, 0, "t", 3, None, None),
+    (_lsn_hex(3), 0, 0, 0, "t", 3, "x", _T2),
+    (_lsn_hex(3), 0, 5, 0, "t", 3, "x", _T2),
+    (_lsn_hex(3), 0, None, 0, "t", 3, "x", _T2),
+    (None, 0, 1, 0, "t", 4, "d", _T1),
+    (None, 0, 2, 0, "t", 4, "i", _T1),
+    (None, 0, 3, 0, "t", 4, "b", _T1),
+    (None, 0, 4, 0, "t", 4, "a", _T1),
+    (_lsn_hex(2), None, 2, 0, None, 5, "i", None),
+    (_lsn_hex(2), None, 3, 0, "u", 5, "b", _T2),
+    (_lsn_hex(2), None, 4, 0, "u", 5, "a", _T2),
+]
+
+
+@settings(max_examples=10, deadline=None)
+@given(
+    cdc=st.lists(_cdc_row, max_size=14),
+    lsn_map=st.none() | st.lists(_map_row, max_size=5),
+)
+@example(cdc=_ALL_SHAPES, lsn_map=[(1, _T1), (1, _T2), (2, None), (4, _T1)])
+@example(cdc=_ALL_SHAPES, lsn_map=None)
+def test_mssql_pairing_equals_four_branch_join(spark, cdc, lsn_map):
+    """The one-exchange pairing returns exactly the four-branch join's
+    rows (multiplicity included) and schema, for any mix of duplicate
+    keys, unpaired halves, unknown ops, NULL keys and LSN-map misses or
+    duplicates, with and without an LSN map."""
+    if lsn_map is None:
+        rows = _local(spark, cdc, _CDC_ROW_DDL + ", commit_ts timestamp")
+        ts_map = None
+    else:
+        rows = _local(spark, [r[:-1] for r in cdc], _CDC_ROW_DDL)
+        ts_map = _local(spark, lsn_map, "lsn long, commit_ts timestamp")
+    got = mssql_rows_to_events(rows, ["id", "name"], ts_map)
+    want = _four_branch_pairing(rows, ["id", "name"], ts_map)
+    assert got.schema == want.schema
+    assert got.count() == want.count()
+    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+
+
+def test_mssql_pairing_one_scan_one_exchange(spark, tmp_path):
+    """Over CDC rows in parquet the executed plan scans the rows once,
+    shuffles once (the (lsn, seq) grouping) and sort-merges nothing."""
+    rows_path, map_path = str(tmp_path / "rows"), str(tmp_path / "map")
+    spark.createDataFrame(
+        [r[:-1] for r in _ALL_SHAPES], _CDC_ROW_DDL
+    ).write.parquet(rows_path)
+    spark.createDataFrame(
+        [(1, _T1), (2, _T2)], "lsn long, commit_ts timestamp"
+    ).write.parquet(map_path)
+    events = mssql_rows_to_events(
+        spark.read.parquet(rows_path), ["id", "name"], spark.read.parquet(map_path)
+    )
+    assert events.count() == 8
+    events.write.format("noop").mode("overwrite").save()
+    plan = events._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    text = plan.toString()
+    scans = [ln for ln in text.splitlines() if "FileScan" in ln]
+    assert sum(rows_path in ln for ln in scans) == 1, text
+    assert text.count("hashpartitioning") == 1, text
+    assert "SortMergeJoin" not in text, text
 
 
 def test_csv_json_event_roundtrip(spark, cdc_fixture, tmp_path):

@@ -78,6 +78,22 @@ def test_export_shards_roundtrip_and_manifest(spark, sf_dir, tmp_path):
     assert os.path.isdir(os.path.join(path, "_manifest"))
 
 
+def test_shard_file_counts_is_a_local_relation(spark, tmp_path):
+    """The manifest's per-shard file counts join as a local relation:
+    no Python RDD scan in the plan, so no Python-worker job."""
+    from changedatacapture_reporting_spark.operators.export import (
+        shard_file_counts,
+    )
+
+    path = str(tmp_path / "shards")
+    for k, n in ((0, 2), (3, 1)):
+        spark.range(n).repartition(n).write.parquet(f"{path}/shard={k}")
+    counts = shard_file_counts(spark, path)
+    assert sorted(tuple(r) for r in counts.collect()) == [(0, 2), (3, 1)]
+    plan = counts._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+
 def test_export_shards_jsonl(spark, sf_dir, tmp_path):
     """json format: identical assignment + manifest; data reads back as
     JSON LINES with the same rows."""

@@ -331,6 +331,24 @@ def test_r12_parquet_dialect_table_still_reads(spark, tmp_path):
     assert got == [0, 1, 2, 3, 5, 7, 8, 9]
 
 
+def test_r12_parquet_dialect_entries_are_a_local_relation(spark, tmp_path):
+    """The (DV directory, data file) pairs that validate r12-era entries
+    join as a local relation: the read's executed plan holds no Python
+    RDD scan, so it runs no Python-worker job."""
+    base = str(tmp_path / "t")
+    add = _one_file_table(spark, base)
+    dv_rel = f"{DV_DIR}/dv-deadbeef"
+    spark.range(1).selectExpr(
+        "'f1.parquet' AS path", "4L AS row_index"
+    ).write.parquet(os.path.join(base, dv_rel))
+    add["deletionVector"] = {"path": dv_rel, "cardinality": 1}
+    _commit0(base, add)
+    out = read_delta(spark, base)
+    assert out.count() == 9
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+
 def test_vacuum_spec_bin_lifecycle(spark, tmp_path):
     """Superseded ``.bin`` vectors are reclaimed, the live one is kept,
     and a just-written (young) orphan survives the age guard — which

@@ -1103,6 +1103,44 @@ def test_first_batch_crash_before_checkpoint_commit_replays(spark, workdir):
     assert os.path.exists(f"{ckpt}/commits/0")  # the replay committed
 
 
+def test_stream_populate_delta_sink_replays_uncommitted_batch(
+    spark, sf_dir, workdir
+):
+    """Crash after the last epoch's Delta commit but before the engine
+    wrote its ``commits/<n>``: the restart on the same checkpoint is
+    accepted, replays that epoch, and the sink's txn watermark skips it,
+    adding no table version and no row."""
+    from changedatacapture_reporting_spark.sources.delta_table import (
+        last_txn_version,
+        read_delta,
+        table_versions,
+    )
+
+    events = simulate_cdc_events(spark, sf_dir)
+    events_path = f"{workdir}/rp_events"
+    events.write.parquet(events_path)
+    schema = spark.read.parquet(events_path).schema
+    sink, ckpt = f"{workdir}/rp_sink", f"{workdir}/rp_ckpt"
+
+    def drain():
+        _drain(stream_populate(
+            spark, events_path, schema, sink, ckpt, SIM_PK,
+            sink_format="delta",
+        ))
+
+    drain()
+    last = last_txn_version(spark, sink, "stream_populate")
+    versions, n = table_versions(spark, sink), read_delta(spark, sink).count()
+    assert os.path.exists(f"{ckpt}/offsets/{last}")
+    for name in (str(last), f".{last}.crc"):  # the checksum is written with it
+        os.remove(f"{ckpt}/commits/{name}")
+
+    drain()
+    assert table_versions(spark, sink) == versions
+    assert read_delta(spark, sink).count() == n
+    assert os.path.exists(f"{ckpt}/commits/{last}")  # the replay committed
+
+
 def test_stream_maintain_aggregate_decimal_no_bootstrap(spark, workdir):
     """Without bootstrap_aggregate, the pre-bootstrap empty frame must
     type decimal measures as the sum-result decimal (not long), so the
@@ -1229,11 +1267,11 @@ def test_stream_populate_delta_sink_matches_batch_and_replays(
     spark, sf_dir, workdir
 ):
     """stream_populate(sink_format='delta'): the drained Delta sink
-    equals the batch changelog; the txn-per-epoch marker makes a
-    checkpoint-less re-drain (fresh checkpoint dir, same epochs) an
-    exact no-op — exactly-once comes from the PROTOCOL's transaction
-    action, not from a sidecar scan; and a BATCH populate resumes the
-    same sink through the shared per-table watermark txns."""
+    equals the batch changelog; a fresh checkpoint against the sink is
+    refused at start (its epochs would restart at 0 and the sink's txn
+    watermark would skip them, dropping new rows); and a BATCH populate
+    resumes the same sink through the shared per-table watermark
+    txns."""
     from changedatacapture_reporting_spark.operators.changelog import (
         build_changelog,
     )
@@ -1269,14 +1307,12 @@ def test_stream_populate_delta_sink_matches_batch_and_replays(
         and expected.select(cols).exceptAll(got.select(cols)).isEmpty()
     )
 
-    # fresh checkpoint = the engine replays every epoch; the sink's txn
-    # watermarks must swallow all of them
-    _drain(
+    # fresh checkpoint: refused before it starts, the sink untouched
+    with pytest.raises(ValueError, match="'stream_populate' up to batch"):
         stream_populate(
             spark, events_path, schema, sink, f"{workdir}/ckpt2", SIM_PK,
             sink_format="delta",
         )
-    )
     assert read_delta(spark, sink).count() == n1
 
     # batch populate over the same (already-loaded) events: resume
